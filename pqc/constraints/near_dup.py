@@ -13,9 +13,10 @@ version became the suite's dominant cost at 150k rows). The exact
 
 Scale notes (north_rule "salted repartitioning for phash/format skew"):
 monochrome/flat corpora concentrate phashes into few values → hot
-buckets. ``pqc/skew.py::capped_band_join`` diverts buckets above a
-member cap (pairs sharing a non-hot band-pair keep full recall; fully
-hot groups are exact duplicates caught by the cheap exact pass first).
+buckets. ``pqc/skew.py::band_pairs`` counts bucket sizes and diverts
+buckets above a member cap before collection (pairs sharing a non-hot
+band-pair keep full recall; fully hot groups are exact duplicates
+caught by the cheap exact pass first).
 AQE skew-join is the backstop for residual imbalance.
 
 Reference analogue: the pictogram-membership check (SURVEY §2.8 I11)
@@ -30,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pqc.constraints import SuiteContext, as_violation
+from pqc.skew import band_pairs
 
 HAMMING_MAX = 6
 N_BANDS = 8
@@ -62,15 +64,20 @@ def _band_table(images: DataFrame) -> DataFrame:
     ).select("seq", "phash", "band.band_idx", "band.band_val")
 
 
+def _screen(images: DataFrame, cap: int | None) -> tuple[DataFrame, DataFrame]:
+    return band_pairs(
+        _band_table(images),
+        ("band_idx", "band_val"),
+        F.struct("seq", "phash"),
+        "seq",
+        cap,
+    )
+
+
 def hot_buckets(images: DataFrame, cap: int | None = None) -> DataFrame:
     """(band_idx, band_val, n_members) buckets above the skew cap —
     the diverted-work surface (empty on a healthy corpus)."""
-    from pqc.skew import DEFAULT_BAND_CAP, capped_band_join
-
-    _, hot = capped_band_join(
-        _band_table(images), ("band_idx", "band_val"), cap or DEFAULT_BAND_CAP
-    )
-    return hot
+    return _screen(images, cap)[1]
 
 
 def candidate_pairs(images: DataFrame, cap: int | None = None) -> DataFrame:
@@ -80,37 +87,23 @@ def candidate_pairs(images: DataFrame, cap: int | None = None) -> DataFrame:
     the lower seq, mirroring first-wins dedupe
     (`artwork_processing_warnings_advisory.py:240-249`).
     """
-    from pqc.skew import DEFAULT_BAND_CAP, capped_band_join
-
     base = images.select("seq", "image_id", "part", "phash").filter(
         F.col("phash").isNotNull()
     )
-    bands = _band_table(images)
     # SKEW GUARD (north_rule "salted repartitioning for phash/format
-    # skew"): buckets above the cap are diverted BEFORE collect_list —
-    # a monochrome-heavy corpus collapses phashes onto few values and
-    # one hot bucket's |members|² otherwise explodes a single task.
-    # Recall: any pair sharing a non-hot band-pair is still found
+    # skew"): buckets above the cap are counted and diverted before
+    # collection — a monochrome-heavy corpus collapses phashes onto few
+    # values and one hot bucket's |members|² otherwise explodes a single
+    # task. Recall: any pair sharing a non-hot band-pair is still found
     # (28 keys/pair); fully-hot groups are near-identical phashes whose
     # identical-phash members the exact-dup layer already groups.
-    # Diverted buckets are surfaced via hot_buckets().
-    cold, _hot = capped_band_join(bands, ("band_idx", "band_val"), cap or DEFAULT_BAND_CAP)
-    # ONE pair-generating shuffle (the groupBy); pair generation happens
-    # bucket-locally via a double explode — a two-sided self-join would
-    # shuffle the band table twice and hash-join 2×28·n rows. The
-    # shuffled payload is just (seq, phash) — 16 bytes/row; image_id/
-    # part rejoin AFTER pair confirmation, when only the (few) confirmed
-    # pairs remain. Cold buckets are ≤ cap members by construction.
-    buckets = (
-        cold.groupBy("band_idx", "band_val")
-        .agg(F.collect_list(F.struct("seq", "phash")).alias("members"))
-        .filter(F.size("members") >= 2)
-    )
+    # Diverted buckets are surfaced via hot_buckets(). The shuffled
+    # payload is just (seq, phash) — 16 bytes/row; image_id/part rejoin
+    # AFTER pair confirmation, when only the (few) confirmed pairs
+    # remain.
+    pairs, _hot = _screen(images, cap)
     slim_pairs = (
-        buckets.select(F.explode("members").alias("a"), F.col("members"))
-        .select("a", F.explode("members").alias("b"))
-        .filter(F.col("a.seq") < F.col("b.seq"))
-        .select(
+        pairs.select(
             F.col("a.seq").alias("seq_a"),
             F.col("b.seq").alias("seq_b"),
             F.expr("bit_count(a.phash ^ b.phash)").alias("hamming"),

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pqc.exprs import hash64, hash64_sql_duckdb, minhash_perm, minhash_perm_sql
 from pqc.io import load_table, spread
 from pqc.registry import pin, register
+from pqc.skew import band_pairs
 from pqc.text import NORM_SQL, TOKENS_SQL, norm_text, tokens
 
 _NONEMPTY = "text IS NOT NULL AND length(trim(text)) > 0"
@@ -166,34 +167,15 @@ def _shingle_df(spark: SparkSession, sf_dir: str, k: int = SHINGLE_K) -> DataFra
     )
 
 
-def split_shingles(
-    sh: DataFrame, cap: int = MAX_SHINGLE_DF
-) -> tuple[DataFrame, DataFrame]:
-    """(cold, hot) split of the shingle table by document frequency
-    (the inverted index's skew guard: one boilerplate shingle in d docs
-    contributes d²/2 candidate pairs). The df count is a map-side-
-    combined aggregate; the hot KEY list is tiny by construction, so
-    both sides are broadcast (anti-)joins against it."""
-    dfc = sh.groupBy("hs").agg(F.count(F.lit(1)).alias("df"))
-    hot_keys = F.broadcast(dfc.filter(F.col("df") > cap).select("hs"))
-    cold = sh.join(hot_keys, "hs", "left_anti")
-    hot = sh.join(hot_keys, "hs", "left_semi")
-    return cold, hot
-
-
-def capped_shingles(sh: DataFrame, cap: int = MAX_SHINGLE_DF) -> DataFrame:
-    """Cold side of :func:`split_shingles` (candidate-generation input)."""
-    return split_shingles(sh, cap)[0]
-
-
 @register("ngram_jaccard_pairs", oracle=_JACCARD_ORACLE)
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pairs by word-4-gram Jaccard ≥ 0.2.
 
-    Inverted-index aggregate with a hot-shingle df cap: postings are
-    grouped per shingle ONCE, the cap is applied on the grouped
-    buckets, and candidate pairs are generated bucket-locally (never a
-    cross join, never quadratic in a boilerplate shingle's bucket).
+    Inverted-index aggregate with a hot-shingle df cap: shingle
+    document frequencies are counted first and the hot shingles'
+    postings are diverted before collection (:func:`pqc.skew.band_pairs`),
+    so candidate pairs are generated bucket-locally (never a cross join,
+    never quadratic in a boilerplate shingle's bucket).
     The bucket-local pair explode doubles as the COLD-intersection
     count (GROUP BY pair — same shuffle, one more aggregate), so the
     full-set verify reduces to
@@ -207,25 +189,18 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     same screen→confirm layering as MinHash below.
     """
     sh = pin(_shingle_df(spark, sf_dir))  # reused: buckets, sizes
-    # ONE inverted-index aggregate replaces the r5 [df count + broadcast
-    # anti-join + semi-join + two-sided self-join] ladder: group the
-    # postings once, apply the df cap on the grouped buckets (identical
-    # cold/hot split semantics), and generate candidate pairs + their
-    # cold-intersection counts bucket-locally (guide §2.4: the band
-    # table is shuffled once, not three times). Buckets are ≤ cap
-    # members by construction, so the double explode is bounded.
-    buckets = pin(sh.groupBy("hs").agg(F.collect_list("doc_id").alias("ds")))
+    # ONE inverted-index aggregate: postings are grouped per cold
+    # shingle once and candidate pairs + their cold-intersection counts
+    # are generated bucket-locally (the postings are shuffled once to
+    # build pairs, never self-joined).
+    pairs, hot_keys = band_pairs(
+        sh, ("hs",), F.struct("doc_id"), "doc_id", MAX_SHINGLE_DF
+    )
     cold_common = pin(  # feeds hot_common AND inter
-        buckets.filter((F.size("ds") <= MAX_SHINGLE_DF) & (F.size("ds") >= 2))
-        .select(F.explode("ds").alias("a"), "ds")
-        .select("a", F.explode("ds").alias("b"))
-        .filter(F.col("a") < F.col("b"))
-        .groupBy(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
+        pairs.groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_cold"))
     )
-    hot = buckets.filter(F.size("ds") > MAX_SHINGLE_DF).select(
-        "hs", F.explode("ds").alias("doc_id")
-    )
+    hot = sh.join(F.broadcast(hot_keys.select("hs")), "hs", "left_semi")
     hsa = hot.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("ha"))
     hsb = hot.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hb"))
     hot_common = (
@@ -342,17 +317,15 @@ def _minhash_rep_candidates(
        of the shingle sets alone, so every member pair's score equals
        its representative pair's score (reconstructed in
        :func:`_expand_rep_pairs`).
-    2. **Hot-bucket cap** (capped_band_join semantics, fused into the
-       pair-generating groupBy) as the backstop for near-identical-but-
-       distinct sets that still pile into one bucket: buckets above the
-       cap are diverted from pairing (recall via any non-hot band, as
-       in the phash path) and surfaced as stats.
+    2. **Hot-bucket cap** (:func:`pqc.skew.band_pairs`) as the backstop
+       for near-identical-but-distinct sets that still pile into one
+       bucket: bucket sizes are counted and buckets above the cap are
+       diverted before collection (recall via any non-hot band, as in
+       the phash path) and surfaced as stats.
 
     Returns ``(cand_rep_pairs, membership, hot_buckets)`` where
     membership is ``(doc_id, sskey, rep_id, n_members)``.
     """
-    from pqc.skew import DEFAULT_BAND_CAP
-
     n_bands = k // rows
     # ONE groupBy computes the set-key and the signature together: the
     # collapse costs no extra shuffle over the plain signature pass
@@ -395,25 +368,10 @@ def _minhash_rep_candidates(
         "doc_id",
         F.explode(F.array(*[F.col(f"band{b}") for b in range(n_bands)])).alias("band"),
     )
-    # ONE pair-generating shuffle with the hot-bucket cap applied on the
-    # grouped buckets (same guard semantics as capped_band_join — hot
-    # buckets diverted from pairing and surfaced as stats — fused so the
-    # band table is aggregated once instead of count-pass + anti-join +
-    # two-sided self-join; the r5 shape shuffled bk three times). Pair
-    # generation is bucket-local (phash-path shape, ≤ cap members).
-    c = cap or DEFAULT_BAND_CAP
-    buckets = bk.groupBy("band").agg(F.collect_list("doc_id").alias("members"))
-    hot = buckets.filter(F.size("members") > c).select(
-        "band", F.size("members").alias("n_members")
-    )
-    cand = (
-        buckets.filter((F.size("members") <= c) & (F.size("members") >= 2))
-        .select(F.explode("members").alias("a"), "members")
-        .select("a", F.explode("members").alias("b"))
-        .filter(F.col("a") < F.col("b"))
-        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
-        .dropDuplicates()
-    )
+    pairs, hot = band_pairs(bk, ("band",), F.struct("doc_id"), "doc_id", cap)
+    cand = pairs.select(
+        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+    ).dropDuplicates()
     return cand, membership, hot
 
 
@@ -693,15 +651,14 @@ def _simhash_rep_candidates(
     (r4 verdict #1): identical simhashes collapse to one representative
     before banding — a corpus of m identical documents contributes ONE
     band row instead of an m²/2 bucket join — and the representative
-    band table goes through the hot-bucket cap as the backstop. Exact:
+    band table goes through the hot-bucket cap
+    (:func:`pqc.skew.band_pairs`) as the backstop. Exact:
     hamming is a function of the two fingerprints alone.
 
-    Returns ``(rep_pairs, membership, hot)``: rep_pairs is
-    ``(sim_a, sim_b, hamming)`` over distinct fingerprints; membership
-    is ``(doc_id, simhash)`` (= sig).
+    Returns ``(rep_pairs, reps, hot)``: rep_pairs is
+    ``(sim_a, sim_b, ra, rb, hamming)`` over distinct fingerprints;
+    reps is ``(simhash, rep_id)``.
     """
-    from pqc.skew import DEFAULT_BAND_CAP
-
     reps = sig.groupBy("simhash").agg(F.min("doc_id").alias("rep_id"))
     band_keys = F.array(
         *[
@@ -716,22 +673,11 @@ def _simhash_rep_candidates(
         reps.select("simhash", "rep_id", F.explode(band_keys).alias("band"))
         .select("simhash", "rep_id", "band.band_idx", "band.band_val")
     )
-    # fused hot-cap + bucket-local pair generation (one shuffle; see
-    # _minhash_rep_candidates — same guard semantics as the r5
-    # capped_band_join + two-sided self-join, 3× fewer band passes)
-    c = cap or DEFAULT_BAND_CAP
-    buckets = bk.groupBy("band_idx", "band_val").agg(
-        F.collect_list(F.struct("simhash", "rep_id")).alias("members")
-    )
-    hot = buckets.filter(F.size("members") > c).select(
-        "band_idx", "band_val", F.size("members").alias("n_members")
+    pairs, hot = band_pairs(
+        bk, ("band_idx", "band_val"), F.struct("simhash", "rep_id"), "rep_id", cap
     )
     rep_pairs = (
-        buckets.filter((F.size("members") <= c) & (F.size("members") >= 2))
-        .select(F.explode("members").alias("a"), "members")
-        .select("a", F.explode("members").alias("b"))
-        .filter(F.col("a.rep_id") < F.col("b.rep_id"))
-        .select(
+        pairs.select(
             F.col("a.simhash").alias("sim_a"),
             F.col("b.simhash").alias("sim_b"),
             F.col("a.rep_id").alias("ra"),
@@ -741,7 +687,7 @@ def _simhash_rep_candidates(
         .filter(F.col("hamming") <= SIMHASH_HAMMING_MAX)
         .dropDuplicates(["sim_a", "sim_b"])
     )
-    return rep_pairs, sig, hot
+    return rep_pairs, reps, hot
 
 
 def _simhash_pairs(sig: DataFrame, cap: int | None = None) -> DataFrame:
@@ -752,10 +698,10 @@ def _simhash_pairs(sig: DataFrame, cap: int | None = None) -> DataFrame:
     (:func:`_simhash_rep_candidates`); the member-level pair set is
     reconstructed exactly (cross pairs inherit their fingerprints'
     hamming; identical-fingerprint pairs are hamming 0)."""
-    rep_pairs, membership, _hot = _simhash_rep_candidates(sig, cap)
-    membership = pin(membership)
+    sig = pin(sig)
+    rep_pairs, _reps, _hot = _simhash_rep_candidates(sig, cap)
     has_dups = (
-        membership.groupBy("simhash")
+        sig.groupBy("simhash")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") > 1)
         .limit(1)
@@ -764,13 +710,13 @@ def _simhash_pairs(sig: DataFrame, cap: int | None = None) -> DataFrame:
     )
     if not has_dups:
         # identity collapse: rep ids ARE the doc ids (ra < rb by the
-        # join condition) — emit directly, skipping the 3 expansion
+        # pair order) — emit directly, skipping the 3 expansion
         # stages whose scheduling floor dominates at small scale
         return rep_pairs.select(
             F.col("ra").alias("doc_a"), F.col("rb").alias("doc_b"), "hamming"
         )
-    mem_a = membership.select(F.col("simhash").alias("sim_a"), F.col("doc_id").alias("ma"))
-    mem_b = membership.select(F.col("simhash").alias("sim_b"), F.col("doc_id").alias("mb"))
+    mem_a = sig.select(F.col("simhash").alias("sim_a"), F.col("doc_id").alias("ma"))
+    mem_b = sig.select(F.col("simhash").alias("sim_b"), F.col("doc_id").alias("mb"))
     cross = (
         rep_pairs.join(mem_a, "sim_a")
         .join(mem_b, "sim_b")
@@ -780,8 +726,8 @@ def _simhash_pairs(sig: DataFrame, cap: int | None = None) -> DataFrame:
             F.col("hamming"),
         )
     )
-    ga = membership.select("simhash", F.col("doc_id").alias("doc_a"))
-    gb = membership.select("simhash", F.col("doc_id").alias("doc_b"))
+    ga = sig.select("simhash", F.col("doc_id").alias("doc_a"))
+    gb = sig.select("simhash", F.col("doc_id").alias("doc_b"))
     within = (
         ga.join(gb, "simhash")
         .filter(F.col("doc_a") < F.col("doc_b"))
@@ -980,11 +926,18 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at sf1.0) only to contract it again; the rep graph is orders of
     # magnitude smaller on duplicate-heavy corpora and identical in
     # the labels it induces.
-    rep_pairs, _membership, _hot = _simhash_rep_candidates(sig)
-    reps = sig.groupBy("simhash").agg(F.min("doc_id").alias("rep_id"))
+    rep_pairs, reps, _hot = _simhash_rep_candidates(sig)
+    # both edge directions from ONE pass over the screen: the executed
+    # plan of a union of two rep_pairs selects reuses none of their
+    # exchanges, so it ran the whole band screen twice
     edges = rep_pairs.select(
-        F.col("ra").alias("src"), F.col("rb").alias("dst")
-    ).unionByName(rep_pairs.select(F.col("rb").alias("src"), F.col("ra").alias("dst")))
+        F.explode(
+            F.array(
+                F.struct(F.col("ra").alias("src"), F.col("rb").alias("dst")),
+                F.struct(F.col("rb").alias("src"), F.col("ra").alias("dst")),
+            )
+        ).alias("e")
+    ).select("e.src", "e.dst")
     rep_labels = connected_components(
         reps.select(F.col("rep_id").alias("doc_id")), edges
     )

@@ -279,11 +279,10 @@ def ensure_generated_parquet(
                 yield pd.DataFrame([row_fn(int(i)) for i in pdf["id"]])
 
         # atomic publish (write to a pid-suffixed temp dir, rename into
-        # place), mirroring the IVF index cache: the r5 direct
-        # check-then-overwrite raced concurrent pqc sessions on this
-        # shared host, and the DuckDB oracles glob path/*.parquet
-        # without checking _SUCCESS (r5 ADVICE)
-        import shutil
+        # place), as for the IVF index cache: a direct
+        # check-then-overwrite races concurrent pqc sessions, and the
+        # DuckDB oracles glob path/*.parquet without checking _SUCCESS
+        from pqc.io import publish_dir
 
         tmp = f"{path}.build{os.getpid()}"
         (
@@ -292,10 +291,7 @@ def ensure_generated_parquet(
             .write.mode("overwrite")
             .parquet(tmp)
         )
-        try:
-            os.rename(tmp, path)  # atomic; loser keeps winner's copy
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
+        publish_dir(tmp, path)
     return path
 
 

@@ -11,6 +11,7 @@ Iceberg manifests.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -57,6 +58,27 @@ def spread(df: DataFrame, n: int | None = None) -> DataFrame:
     """
     n = n or df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n)
+
+
+def publish_dir(tmp: str, path: str) -> None:
+    """Atomically publish the freshly written directory ``tmp`` at
+    ``path`` (rename into place), so readers never see a half-written
+    cache. If ``path`` already holds a complete copy (``_SUCCESS``
+    present: a concurrent writer won), ``tmp`` is discarded. A copy
+    without ``_SUCCESS`` is the leftover of a crashed writer: it is
+    removed and the rename retried, or it would be served forever."""
+    try:
+        os.rename(tmp, path)
+        return
+    except OSError:
+        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+            shutil.rmtree(path, ignore_errors=True)
+            try:
+                os.rename(tmp, path)
+                return
+            except OSError:
+                pass
+    shutil.rmtree(tmp, ignore_errors=True)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

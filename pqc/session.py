@@ -10,6 +10,7 @@ default, UTC timezone pinned so DuckDB-oracle comparisons line up.
 from __future__ import annotations
 
 import os
+import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -113,7 +114,7 @@ def _ship_package(spark: SparkSession) -> None:
     of ``spark-submit --py-files pqc.zip``) so mapInPandas closures can
     import it regardless of the driver's working directory."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join("/tmp", f"pqc_pyfiles_{os.getpid()}.zip")
+    zip_path = os.path.join(tempfile.gettempdir(), f"pqc_pyfiles_{os.getpid()}.zip")
     if not os.path.exists(zip_path):
         with zipfile.ZipFile(zip_path, "w") as zf:
             for root, _dirs, files in os.walk(pkg_dir):

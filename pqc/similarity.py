@@ -15,8 +15,9 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from pqc.exprs import hash64
-from pqc.io import load_table, spread
+from pqc.io import load_table, publish_dir, spread
 from pqc.registry import pin, register
+from pqc.skew import band_pairs
 
 KNN_K = 10
 N_QUERIES = 10
@@ -489,7 +490,6 @@ def _cached_trained_centroids(
     rename into place): the r4 check-then-overwrite raced concurrent
     pqc sessions on this shared host."""
     import os
-    import shutil
 
     src = f"{sf_dir}/embeddings.parquet"
     st = os.stat(src)
@@ -502,10 +502,7 @@ def _cached_trained_centroids(
     if not os.path.exists(f"{path}/_SUCCESS"):
         tmp = f"{path}.build{os.getpid()}"
         _lloyd_refined_centroids(emb, iters).write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, path)  # atomic publish; loser keeps winner's copy
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
+        publish_dir(tmp, path)
     return spark.read.parquet(path)
 
 
@@ -1085,17 +1082,15 @@ def _srp_rep_candidates(
     of a duplicate-heavy corpus, and all landing in ONE bucket since
     the code is a function of the vector — collapse to min(vec_id)
     representatives before banding; the representative band table then
-    goes through the fused hot-bucket cap (capped_band_join semantics,
-    one grouped pass) as the backstop for
-    near-identical-but-distinct pileups. Exact: cosine is a function
-    of the two vectors alone, so member pairs inherit their
+    goes through the hot-bucket cap (:func:`pqc.skew.band_pairs`:
+    bucket sizes counted, hot buckets diverted before collection) as
+    the backstop for near-identical-but-distinct pileups. Exact: cosine
+    is a function of the two vectors alone, so member pairs inherit their
     representatives' score (reconstructed in :func:`_srp_pairs`).
 
     Returns ``(cand, membership, hot)``: cand carries representative
     pair ids + vectors + norms; membership is ``(vec_id, vkey, rep_id)``.
     """
-    from pqc.skew import DEFAULT_BAND_CAP
-
     vkey = hash64(
         F.concat_ws(",", F.transform(F.col("embedding"), lambda x: x.cast("string")))
     )
@@ -1131,24 +1126,12 @@ def _srp_rep_candidates(
             )
         ).alias("band"),
     ).select("vec_id", "band.band_idx", "band.band_val")
-    # fused hot-cap + bucket-local pair generation (one shuffle; same
-    # guard semantics as the r5 capped_band_join + two-sided self-join
-    # — see _minhash_rep_candidates in pqc/dedup.py)
-    c = cap or DEFAULT_BAND_CAP
-    buckets = bk.groupBy("band_idx", "band_val").agg(
-        F.collect_list("vec_id").alias("members")
+    pairs, hot = band_pairs(
+        bk, ("band_idx", "band_val"), F.struct("vec_id"), "vec_id", cap
     )
-    hot = buckets.filter(F.size("members") > c).select(
-        "band_idx", "band_val", F.size("members").alias("n_members")
-    )
-    id_pairs = (
-        buckets.filter((F.size("members") <= c) & (F.size("members") >= 2))
-        .select(F.explode("members").alias("a"), "members")
-        .select("a", F.explode("members").alias("b"))
-        .filter(F.col("a") < F.col("b"))
-        .select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    id_pairs = pairs.select(
+        F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b")
+    ).dropDuplicates(["id_a", "id_b"])
     va = rep_vecs.select(
         F.col("vec_id").alias("id_a"),
         F.col("embedding").alias("ea"),

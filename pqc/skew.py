@@ -1,5 +1,5 @@
 """Skew handling — salted repartitioning / two-phase aggregation and
-the hot-band cap for phash LSH joins (north_rule: "salted
+the hot-bucket cap for near-dup band joins (north_rule: "salted
 repartitioning for phash/format skew, AQE-tuned shuffles").
 
 Two tools:
@@ -12,14 +12,16 @@ Two tools:
    ``n_salts`` reducers. AQE's skew-join handles *joins*; aggregation
    skew needs this rewrite.
 
-2. ``capped_band_join``: phash band self-joins explode when a band
-   value is hot (monochrome corpora collapse to few phashes). Banding
-   guarantees candidates for hamming ≤ 7 via ANY matching band, so
-   dropping buckets above a count cap bounds the join to
-   O(cap²·n_buckets) while keeping recall for pairs that share a
-   *non-hot* band; fully-hot pairs are exact duplicates caught by the
-   cheap exact-dup pass first (same screen→confirm layering as
-   SURVEY §3.3).
+2. ``band_pairs``: the prescreen of every near-dup ladder groups a
+   band table into buckets and pairs the members of each bucket. Band
+   self-joins explode when a band value is hot (monochrome corpora
+   collapse to few phashes; duplicate-heavy text to few signatures).
+   Banding guarantees candidates via ANY matching band, so bucket
+   sizes are counted and buckets above a member cap are diverted
+   before collection: the pairing is bounded to O(cap²·n_buckets)
+   while pairs that share a *non-hot* band keep full recall; fully-hot
+   pairs are exact duplicates caught by the cheap exact-dup pass first
+   (same screen→confirm layering as SURVEY §3.3).
 """
 
 from __future__ import annotations
@@ -51,23 +53,42 @@ def salted_count(df: DataFrame, key: str | Column, n_salts: int = DEFAULT_SALTS)
     )
 
 
-def capped_band_join(
+def band_pairs(
     bands: DataFrame,
-    band_cols: tuple[str, ...] = ("band_idx", "band_val"),
-    cap: int = DEFAULT_BAND_CAP,
+    key_cols: tuple[str, ...],
+    member: Column,
+    order: str,
+    cap: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Split a band table into (cold, hot_buckets): cold rows flow to
-    the pairwise self-join; hot buckets (> cap members) are returned
-    for reporting / exact-dup handling instead of joining quadratically.
+    """Candidate pairs from a band table: ``(pairs, hot)``.
 
-    ``band_cols`` is any non-empty tuple of bucket-key column names
-    (the phash path uses ``(band_idx, band_val)``; the MinHash path a
-    single pre-hashed ``(band,)`` key).
+    Bucket sizes are counted first (a map-side-combined aggregate), and
+    the keys of buckets above ``cap`` are broadcast and anti-joined out
+    of the band table, so a hot bucket never builds its O(bucket)
+    member array in one task. The cold buckets are grouped once on
+    ``key_cols`` and paired bucket-locally by a double explode: the
+    band rows are shuffled once and never self-joined (the count
+    exchange carries one partial count per key and task).
 
-    Returns (cold_bands, hot_bucket_stats).
+    ``member`` is a struct column (a struct is never null, so each
+    bucket's list holds exactly its rows); ``order`` names one of its
+    fields, and a pair is kept iff ``a.<order> < b.<order>``.
+
+    Returns ``pairs`` — one row per (bucket, pair), struct columns
+    ``a``/``b``; callers confirm and de-duplicate — and ``hot`` —
+    ``(*key_cols, n_members)`` for every bucket above ``cap``
+    (default :data:`DEFAULT_BAND_CAP`).
     """
-    cols = list(band_cols)
-    counts = bands.groupBy(*cols).agg(F.count(F.lit(1)).alias("n_members"))
-    hot = counts.filter(F.col("n_members") > cap)
-    cold = bands.join(F.broadcast(hot.select(*cols)), cols, "left_anti")
-    return cold, hot
+    keys = list(key_cols)
+    counts = bands.groupBy(*keys).agg(F.count(F.lit(1)).alias("n_members"))
+    hot = counts.filter(F.col("n_members") > (cap or DEFAULT_BAND_CAP))
+    cold = bands.join(F.broadcast(hot.select(*keys)), keys, "left_anti")
+    pairs = (
+        cold.groupBy(*keys)
+        .agg(F.collect_list(member).alias("members"))
+        .filter(F.size("members") >= 2)
+        .select(F.explode("members").alias("a"), "members")
+        .select("a", F.explode("members").alias("b"))
+        .filter(F.col(f"a.{order}") < F.col(f"b.{order}"))
+    )
+    return pairs, hot

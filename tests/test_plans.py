@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from pqc.io import load_table
@@ -78,6 +79,69 @@ def test_near_dup_band_join_not_cartesian(spark):
     assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 3, plan[:3000]
 
 
+def _near_dup_candidate_pairs(spark):
+    from pqc.constraints.near_dup import candidate_pairs
+
+    images = spark.createDataFrame(
+        [(0, "img_0", 0, 1), (1, "img_1", 0, 3)],
+        "seq long, image_id string, part int, phash long",
+    )
+    return candidate_pairs(images)
+
+
+def _subtree(node):
+    """Physical plan nodes under ``node``, descending into cached
+    (pinned) relations and adaptive plans."""
+    yield node
+    if node.nodeName() == "InMemoryTableScan":
+        yield from _subtree(node.relation().cachedPlan())
+    elif node.nodeName() == "AdaptiveSparkPlan":
+        yield from _subtree(node.inputPlan())
+    children = node.children()
+    for i in range(children.size()):
+        yield from _subtree(children.apply(i))
+
+
+def _names(exprs) -> set[str]:
+    return {exprs.apply(i).name() for i in range(exprs.size())}
+
+
+@pytest.mark.parametrize(
+    "ladder",
+    [
+        "candidate_pairs",
+        "minhash_lsh_dedup",
+        "simhash_near_dup_pairs",
+        "srp_lsh_near_dup",
+        "ngram_jaccard_pairs",
+    ],
+)
+def test_every_ladder_diverts_hot_buckets_before_collecting(spark, ladder):
+    """Every near-dup screen counts bucket sizes and diverts hot buckets
+    BEFORE the bucket collect_list: the aggregate's input passes through
+    a broadcast LeftAnti join on the bucket key, so a hot bucket never
+    builds its member array in one task."""
+    if ladder == "candidate_pairs":
+        df = _near_dup_candidate_pairs(spark)
+    else:
+        df = REGISTRY[ladder].fn(spark, SF_DIR_SMALL)
+    aggs = [
+        n
+        for n in _subtree(df._jdf.queryExecution().sparkPlan())
+        if "partial_collect_list" in n.simpleString(100)
+    ]
+    assert aggs, ladder
+    for agg in aggs:
+        keys = _names(agg.groupingExpressions())
+        guarded = any(
+            n.nodeName() == "BroadcastHashJoin"
+            and n.joinType().toString() == "LeftAnti"
+            and _names(n.leftKeys()) == keys
+            for n in _subtree(agg)
+        )
+        assert guarded, f"{ladder}: collect_list over {sorted(keys)} is uncapped"
+
+
 def test_q1_map_side_partial_agg_single_shuffle(spark):
     """The rollup must partial-aggregate before its single exchange —
     the map-side-combine shape that holds at 10^12 rows. (Codegen spans
@@ -113,7 +177,9 @@ def test_no_row_python_udfs_anywhere():
     import pathlib
 
     bad = []
-    for path in pathlib.Path("/root/repo/pqc").rglob("*.py"):
+    sources = list((pathlib.Path(__file__).resolve().parents[1] / "pqc").rglob("*.py"))
+    assert sources
+    for path in sources:
         src = path.read_text()
         if re.search(r"F\.udf\(|@udf\b|functions\.udf\(", src):
             bad.append(str(path))

@@ -9,7 +9,7 @@ import re
 from pyspark.sql import functions as F
 
 from pqc.fixtures import cached_images_path
-from pqc.skew import capped_band_join, salted_count, with_salt
+from pqc.skew import band_pairs, salted_count, with_salt
 
 
 def _plan(df) -> str:
@@ -53,11 +53,27 @@ def test_capped_band_join_drops_only_hot_buckets(spark):
 
     rows = [("a", 0, 1)] * 50 + [("b", 0, 2)] * 3 + [("c", 1, 1)] * 5
     pdf = pd.DataFrame(rows, columns=["id", "band_idx", "band_val"])
-    bands = spark.createDataFrame(pdf)
-    cold, hot = capped_band_join(bands, cap=10)
+    bands = spark.createDataFrame(pdf).withColumn(
+        "row", F.monotonically_increasing_id()
+    )
+    pairs, hot = band_pairs(
+        bands, ("band_idx", "band_val"), F.struct("id", "row"), "row", cap=10
+    )
     hot_rows = hot.collect()
     assert len(hot_rows) == 1 and hot_rows[0]["n_members"] == 50
-    assert cold.count() == 8  # the two cold buckets survive
+    # the two cold buckets survive: C(3,2) + C(5,2) in-bucket pairs
+    pair_ids = [(r["a"]["id"], r["b"]["id"]) for r in pairs.collect()]
+    assert sorted(pair_ids) == [("b", "b")] * 3 + [("c", "c")] * 10
+
+
+def test_band_pairs_counts_hot_bucket_without_collecting(spark):
+    """One bucket of 10⁶ members above a cap of 100: the bucket is
+    counted and diverted, never collected into a member array."""
+    n = 10**6
+    bands = spark.range(n).select(F.lit(0).alias("band"), "id")
+    pairs, hot = band_pairs(bands, ("band",), F.struct("id"), "id", cap=100)
+    assert [tuple(r) for r in hot.collect()] == [(0, n)]
+    assert pairs.count() == 0
 
 
 def test_hll_and_quantile_sketch_accuracy(spark):
@@ -129,7 +145,7 @@ def test_hot_shingle_cap_bounds_boilerplate_corpus(spark, tmp_path):
     rare shingle keep their true (full-set) Jaccard."""
     import pandas as pd
 
-    from pqc.dedup import _shingle_df, capped_shingles
+    from pqc.dedup import _shingle_df
 
     boiler = "terms and conditions apply"
     docs = [(i, boiler + f" unique tail {i} {i} {i} {i}") for i in range(120)]
@@ -148,12 +164,11 @@ def test_hot_shingle_cap_bounds_boilerplate_corpus(spark, tmp_path):
     from pqc.exprs import hash64
 
     sh = _shingle_df(spark, sf)
-    n_cold_boiler = (
-        capped_shingles(sh, cap=100)
-        .filter(F.col("hs") == hash64(F.lit(boiler)))
-        .count()
+    _pairs, hot = band_pairs(sh, ("hs",), F.struct("doc_id"), "doc_id", cap=100)
+    n_hot_boiler = (
+        hot.filter(F.col("hs") == hash64(F.lit(boiler))).first()["n_members"]
     )
-    assert n_cold_boiler == 0  # the df-122 shingle is diverted
+    assert n_hot_boiler == 122  # the df-122 shingle is diverted
 
     from pqc.dedup import ngram_jaccard_pairs
 
