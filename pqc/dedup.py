@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pqc.exprs import hash64, hash64_sql_duckdb, minhash_perm, minhash_perm_sql
 from pqc.io import load_table, spread
 from pqc.registry import pin, register
-from pqc.skew import band_pairs
+from pqc.skew import band_pairs, collapse_reps, expand_rep_pairs
 from pqc.text import NORM_SQL, TOKENS_SQL, norm_text, tokens
 
 _NONEMPTY = "text IS NOT NULL AND length(trim(text)) > 0"
@@ -315,8 +315,8 @@ def _minhash_rep_candidates(
        verify all run over representatives, so m identical docs cost
        1 unit instead of m²/2. This is EXACT — Jaccard is a function
        of the shingle sets alone, so every member pair's score equals
-       its representative pair's score (reconstructed in
-       :func:`_expand_rep_pairs`).
+       its representative pair's score (reconstructed by
+       :func:`pqc.skew.expand_rep_pairs`).
     2. **Hot-bucket cap** (:func:`pqc.skew.band_pairs`) as the backstop
        for near-identical-but-distinct sets that still pile into one
        bucket: bucket sizes are counted and buckets above the cap are
@@ -324,7 +324,8 @@ def _minhash_rep_candidates(
        the phash path) and surfaced as stats.
 
     Returns ``(cand_rep_pairs, membership, hot_buckets)`` where
-    membership is ``(doc_id, sskey, rep_id, n_members)``.
+    membership is ``(sskey, doc_id, rep_id)``
+    (:func:`pqc.skew.collapse_reps`).
     """
     n_bands = k // rows
     # ONE groupBy computes the set-key and the signature together: the
@@ -347,10 +348,7 @@ def _minhash_rep_candidates(
             set_key.alias("sskey"), *_minhash_exprs_spark(F.col("hs"), k)
         )
     )
-    reps = sig.groupBy("sskey").agg(
-        F.min("doc_id").alias("rep_id"), F.count(F.lit(1)).alias("n_members")
-    )
-    membership = sig.select("doc_id", "sskey").join(reps, "sskey")
+    reps, membership = collapse_reps(sig, "doc_id", "sskey")
     rep_sig = sig.join(
         reps.select(F.col("rep_id").alias("doc_id")), "doc_id", "left_semi"
     )
@@ -373,52 +371,6 @@ def _minhash_rep_candidates(
         F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
     ).dropDuplicates()
     return cand, membership, hot
-
-
-def _has_collapse_groups(membership: DataFrame) -> bool:
-    """True iff any fingerprint group has >1 member. One tiny job
-    (limit-1 count on the already-pinned membership); when False the
-    collapse was an identity and the representative pairs ARE the
-    member-level output — the expansion joins (3 extra stages whose
-    scheduling floor dominates at small scale) are skipped. The same
-    data-dependent plan choice AQE makes, one level up."""
-    return (
-        membership.filter(F.col("doc_id") != F.col("rep_id")).limit(1).count() > 0
-    )
-
-
-def _expand_rep_pairs(
-    rep_pairs: DataFrame, membership: DataFrame, value_col: str, unit_value
-) -> DataFrame:
-    """Exact reconstruction of member-level pairs from representative-
-    level pairs: cross pairs inherit their representative pair's score
-    (the score is a function of the collapsed fingerprint alone);
-    within-group pairs score ``unit_value`` (identical fingerprints).
-    Output ordering is re-derived with least/greatest — group members
-    interleave arbitrarily in id order."""
-    mem_a = membership.select(
-        F.col("rep_id").alias("doc_a"), F.col("doc_id").alias("ma")
-    )
-    mem_b = membership.select(
-        F.col("rep_id").alias("doc_b"), F.col("doc_id").alias("mb")
-    )
-    cross = (
-        rep_pairs.join(mem_a, "doc_a")
-        .join(mem_b, "doc_b")
-        .select(
-            F.least("ma", "mb").alias("doc_a"),
-            F.greatest("ma", "mb").alias("doc_b"),
-            F.col(value_col),
-        )
-    )
-    ga = membership.select("sskey", F.col("doc_id").alias("doc_a"))
-    gb = membership.select("sskey", F.col("doc_id").alias("doc_b"))
-    within = (
-        ga.join(gb, "sskey")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", unit_value.alias(value_col))
-    )
-    return cross.unionByName(within)
 
 
 def _minhash_pairs(
@@ -462,12 +414,12 @@ def _minhash_pairs(
     rep_pairs = jacc.select(
         "doc_a", "doc_b", F.round(F.col("jaccard_raw"), 6).alias("jaccard")
     )
-    if not _has_collapse_groups(membership):
-        return rep_pairs  # identity collapse: already member-level
     # exact member-level reconstruction: cross pairs inherit the rep
     # pair's Jaccard (same sets ⇒ same score); within-group pairs are
-    # identical sets ⇒ Jaccard exactly 1.0 (integer n/(n+n−n))
-    return _expand_rep_pairs(rep_pairs, membership, "jaccard", F.lit(1.0))
+    # identical sets ⇒ Jaccard exactly 1.0 (integer n/(n+n−n)); sizes
+    # has one row per representative
+    within = sizes.select(F.col("doc_id").alias("rep_id"), F.lit(1.0).alias("jaccard"))
+    return expand_rep_pairs(rep_pairs, membership, "doc_id", ("doc_a", "doc_b"), within)
 
 
 @register("minhash_lsh_dedup", oracle=_minhash_oracle(MINHASH_K, MINHASH_ROWS))
@@ -659,7 +611,7 @@ def _simhash_rep_candidates(
     ``(sim_a, sim_b, ra, rb, hamming)`` over distinct fingerprints;
     reps is ``(simhash, rep_id)``.
     """
-    reps = sig.groupBy("simhash").agg(F.min("doc_id").alias("rep_id"))
+    reps, _membership = collapse_reps(sig, "doc_id", "simhash")
     band_keys = F.array(
         *[
             F.struct(
@@ -696,44 +648,22 @@ def _simhash_pairs(sig: DataFrame, cap: int | None = None) -> DataFrame:
     the transitive clustering below. Degeneracy-guarded via
     representative collapse + hot-bucket cap
     (:func:`_simhash_rep_candidates`); the member-level pair set is
-    reconstructed exactly (cross pairs inherit their fingerprints'
-    hamming; identical-fingerprint pairs are hamming 0)."""
+    reconstructed exactly by :func:`pqc.skew.expand_rep_pairs` (cross
+    pairs inherit their fingerprints' hamming; identical-fingerprint
+    pairs are hamming 0)."""
     sig = pin(sig)
-    rep_pairs, _reps, _hot = _simhash_rep_candidates(sig, cap)
-    has_dups = (
-        sig.groupBy("simhash")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-        .limit(1)
-        .count()
-        > 0
+    rep_pairs, reps, _hot = _simhash_rep_candidates(sig, cap)
+    # the screen returns only reps; the expansion needs the membership
+    _, membership = collapse_reps(sig, "doc_id", "simhash")
+    # ra < rb by the pair order, so on an identity collapse these rep
+    # pairs ARE the member pairs
+    rep_pairs = rep_pairs.select(
+        F.col("ra").alias("doc_a"), F.col("rb").alias("doc_b"), "hamming"
     )
-    if not has_dups:
-        # identity collapse: rep ids ARE the doc ids (ra < rb by the
-        # pair order) — emit directly, skipping the 3 expansion
-        # stages whose scheduling floor dominates at small scale
-        return rep_pairs.select(
-            F.col("ra").alias("doc_a"), F.col("rb").alias("doc_b"), "hamming"
-        )
-    mem_a = sig.select(F.col("simhash").alias("sim_a"), F.col("doc_id").alias("ma"))
-    mem_b = sig.select(F.col("simhash").alias("sim_b"), F.col("doc_id").alias("mb"))
-    cross = (
-        rep_pairs.join(mem_a, "sim_a")
-        .join(mem_b, "sim_b")
-        .select(
-            F.least("ma", "mb").alias("doc_a"),
-            F.greatest("ma", "mb").alias("doc_b"),
-            F.col("hamming"),
-        )
+    within = reps.select("rep_id", F.lit(0).cast("int").alias("hamming"))
+    return expand_rep_pairs(
+        rep_pairs, pin(membership), "doc_id", ("doc_a", "doc_b"), within
     )
-    ga = sig.select("simhash", F.col("doc_id").alias("doc_a"))
-    gb = sig.select("simhash", F.col("doc_id").alias("doc_b"))
-    within = (
-        ga.join(gb, "simhash")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.lit(0).cast("int").alias("hamming"))
-    )
-    return cross.unionByName(within)
 
 
 # ---------------------------------------------------------------------------
@@ -753,16 +683,19 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     ``nodes``: one column ``doc_id``; ``edges``: ``(src, dst)``,
     expected symmetric. Returns ``(doc_id, cluster_id)``.
 
-    Scale shape: each round is one shuffle join (labels onto edge
-    endpoints) + one map-side-combined min aggregate — the same plan
-    GraphX/GraphFrames CC lowers to. Lineage is truncated per round
-    with ``localCheckpoint`` (an iterative plan otherwise grows one
-    join deeper per round and re-executes from scratch at every
-    convergence count); at 10^12 edges the same loop runs with
-    reliable checkpoints + explicit block cleanup, and the round count
-    stays O(log n) worst-case / O(diameter) typical. The convergence
-    probe is a scalar ``count`` action per round — driver-side by
-    necessity, O(1) data to the driver.
+    Scale shape: each round is one broadcast hash join (the whole
+    label table broadcast onto the cached edge partitions, which are
+    scanned in place) + one map-side-combined min aggregate. The
+    broadcast ships all |V| labels every round, so it grows with the
+    vertex count: on a mostly-distinct corpus |V| ≈ n, and at 10^12
+    scale it must be gated on a size estimate and fall back to a
+    shuffle join (ADVICE r6; still open). Lineage is truncated per
+    round with ``localCheckpoint`` (an iterative plan otherwise grows
+    one join deeper per round and re-executes from scratch at every
+    convergence probe); the round count stays O(log n) worst-case /
+    O(diameter) typical. The convergence probe is one scalar
+    aggregate action per round — driver-side by necessity, O(1) data
+    to the driver.
     """
     # materialize the edge list ONCE: every round's joins + the
     # convergence probe would otherwise re-execute the caller's edge

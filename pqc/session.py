@@ -109,20 +109,28 @@ def get_spark(
     return spark
 
 
+def write_package_zip(zip_path: str) -> str:
+    """Zip every ``.py`` file of the pqc package under ``pqc/`` into
+    ``zip_path``, walking directories and files in sorted order (the
+    ``--py-files`` payload). Returns ``zip_path``."""
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    with zipfile.ZipFile(zip_path, "w") as zf:
+        for root, dirs, files in os.walk(pkg_dir):
+            dirs.sort()
+            for fn in sorted(files):
+                if fn.endswith(".py"):
+                    full = os.path.join(root, fn)
+                    zf.write(full, os.path.join("pqc", os.path.relpath(full, pkg_dir)))
+    return zip_path
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Ship the pqc package to Python workers (the local-mode analogue
     of ``spark-submit --py-files pqc.zip``) so mapInPandas closures can
     import it regardless of the driver's working directory."""
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zip_path = os.path.join(tempfile.gettempdir(), f"pqc_pyfiles_{os.getpid()}.zip")
     if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(root, fn)
-                        rel = os.path.join("pqc", os.path.relpath(full, pkg_dir))
-                        zf.write(full, rel)
+        write_package_zip(zip_path)
     spark.sparkContext.addPyFile(zip_path)
 
 

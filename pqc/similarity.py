@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pqc.exprs import hash64
 from pqc.io import load_table, publish_dir, spread
 from pqc.registry import pin, register
-from pqc.skew import band_pairs
+from pqc.skew import band_pairs, collapse_reps, expand_rep_pairs
 
 KNN_K = 10
 N_QUERIES = 10
@@ -1086,17 +1086,18 @@ def _srp_rep_candidates(
     bucket sizes counted, hot buckets diverted before collection) as
     the backstop for near-identical-but-distinct pileups. Exact: cosine
     is a function of the two vectors alone, so member pairs inherit their
-    representatives' score (reconstructed in :func:`_srp_pairs`).
+    representatives' score (reconstructed by
+    :func:`pqc.skew.expand_rep_pairs` in :func:`_srp_pairs`).
 
     Returns ``(cand, membership, hot)``: cand carries representative
-    pair ids + vectors + norms; membership is ``(vec_id, vkey, rep_id)``.
+    pair ids + vectors + norms; membership is ``(vkey, vec_id, rep_id)``
+    (:func:`pqc.skew.collapse_reps`).
     """
     vkey = hash64(
         F.concat_ws(",", F.transform(F.col("embedding"), lambda x: x.cast("string")))
     )
     keyed = emb.select("vec_id", "embedding", vkey.alias("vkey"))
-    reps = keyed.groupBy("vkey").agg(F.min("vec_id").alias("rep_id"))
-    membership = keyed.select("vec_id", "vkey").join(reps, "vkey")
+    reps, membership = collapse_reps(keyed, "vec_id", "vkey")
     # pinned: feeds the SRP codes AND the post-dedup vector re-attach
     rep_vecs = pin(
         keyed.join(
@@ -1158,24 +1159,6 @@ def _srp_pairs(emb: DataFrame, cap: int | None = None) -> DataFrame:
         .filter(F.col("cos") >= NEAR_DUP_COS)
         .select("id_a", "id_b", F.round("cos", 8).alias("cosine"))
     )
-    has_dups = (
-        membership.filter(F.col("vec_id") != F.col("rep_id")).limit(1).count() > 0
-    )
-    if not has_dups:
-        # identity collapse: representative pairs ARE the member pairs —
-        # skip the expansion + self-cosine stages (scheduling floor)
-        return rep_pairs
-    mem_a = membership.select(F.col("rep_id").alias("id_a"), F.col("vec_id").alias("ma"))
-    mem_b = membership.select(F.col("rep_id").alias("id_b"), F.col("vec_id").alias("mb"))
-    cross = (
-        rep_pairs.join(mem_a, "id_a")
-        .join(mem_b, "id_b")
-        .select(
-            F.least("ma", "mb").alias("id_a"),
-            F.greatest("ma", "mb").alias("id_b"),
-            F.col("cosine"),
-        )
-    )
     # within-group pairs: identical vectors, scored with the SAME
     # expression the oracle evaluates for them — dot(v,v)/(√·√) on the
     # group's vector (decimal fold + IEEE sqrt: bit-identical both
@@ -1187,23 +1170,12 @@ def _srp_pairs(emb: DataFrame, cap: int | None = None) -> DataFrame:
     self_cos = _dot(F.col("embedding"), F.col("embedding")) / (
         F.sqrt(_norm2(F.col("embedding"))) * F.sqrt(_norm2(F.col("embedding")))
     )
-    rep_self = emb.join(
-        membership.filter(F.col("vec_id") != F.col("rep_id"))
-        .select(F.col("rep_id").alias("vec_id"))
-        .dropDuplicates(),
-        "vec_id",
-        "left_semi",
-    ).select(F.col("vec_id").alias("rep_id"), self_cos.alias("cos_raw"))
-    ga = membership.select("vkey", "rep_id", F.col("vec_id").alias("id_a"))
-    gb = membership.select("vkey", F.col("vec_id").alias("id_b"))
     within = (
-        ga.join(gb, "vkey")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .join(rep_self, "rep_id")
+        emb.select(F.col("vec_id").alias("rep_id"), self_cos.alias("cos_raw"))
         .filter(F.col("cos_raw") >= NEAR_DUP_COS)
-        .select("id_a", "id_b", F.round("cos_raw", 8).alias("cosine"))
+        .select("rep_id", F.round("cos_raw", 8).alias("cosine"))
     )
-    return cross.unionByName(within)
+    return expand_rep_pairs(rep_pairs, membership, "vec_id", ("id_a", "id_b"), within)
 
 
 # ---------------------------------------------------------------------------

@@ -1,8 +1,9 @@
-"""Skew handling — salted repartitioning / two-phase aggregation and
-the hot-bucket cap for near-dup band joins (north_rule: "salted
-repartitioning for phash/format skew, AQE-tuned shuffles").
+"""Skew handling — salted repartitioning / two-phase aggregation, the
+hot-bucket cap for near-dup band joins and the duplicate-fingerprint
+collapse (north_rule: "salted repartitioning for phash/format skew,
+AQE-tuned shuffles").
 
-Two tools:
+Three tools:
 
 1. ``salted_count`` / two-phase aggregation: a groupBy on a skewed key
    (``fmt`` is 85/15 in the corpus; real corpora are worse) sends every
@@ -22,6 +23,14 @@ Two tools:
    while pairs that share a *non-hot* band keep full recall; fully-hot
    pairs are exact duplicates caught by the cheap exact-dup pass first
    (same screen→confirm layering as SURVEY §3.3).
+
+3. ``collapse_reps`` / ``expand_rep_pairs``: the MinHash, SimHash and
+   SRP ladders collapse identical fingerprints to one min-id
+   representative before banding, so m identical items cost one band
+   row instead of an m²/2 bucket, screen and confirm only the
+   representatives, then rebuild the exact member pair set (scores are
+   functions of the fingerprints alone). The rebuild is skipped by one
+   limit-1 probe when no fingerprint has a second member.
 """
 
 from __future__ import annotations
@@ -92,3 +101,64 @@ def band_pairs(
         .filter(F.col(f"a.{order}") < F.col(f"b.{order}"))
     )
     return pairs, hot
+
+
+def collapse_reps(
+    df: DataFrame, id_col: str, key_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """Collapse rows with equal ``key_col`` to their min-``id_col``
+    representative: ``(reps, membership)``.
+
+    ``reps`` is ``(key_col, rep_id)`` from a map-side-combined min
+    aggregate — never a window, which would gather a hot key's whole
+    group in one task. ``membership`` is ``(key_col, id_col, rep_id)``,
+    one row per input row.
+    """
+    reps = df.groupBy(key_col).agg(F.min(id_col).alias("rep_id"))
+    membership = df.select(key_col, id_col).join(reps, key_col)
+    return reps, membership
+
+
+def expand_rep_pairs(
+    rep_pairs: DataFrame,
+    membership: DataFrame,
+    id_col: str,
+    pair_cols: tuple[str, str],
+    within: DataFrame,
+) -> DataFrame:
+    """Member-level pairs from representative-level pairs.
+
+    ``rep_pairs`` holds representative ids in ``pair_cols`` plus score
+    columns; ``membership`` comes from :func:`collapse_reps`. One
+    limit-1 probe job checks for a group with a second member; without
+    one the collapse was an identity and ``rep_pairs`` is returned
+    unchanged (no expansion stages are planned). Otherwise cross pairs
+    inherit their representative pair's scores, re-ordered with
+    least/greatest (group members interleave in id order), and
+    within-group pairs — one self-join of ``membership`` on ``rep_id``
+    — take their scores from ``within``, a ``(rep_id, *scores)`` frame
+    scoring a representative against itself (inner-joined, so a
+    representative missing from ``within`` contributes no pairs).
+    """
+    if membership.filter(F.col(id_col) != F.col("rep_id")).limit(1).count() == 0:
+        return rep_pairs
+    a, b = pair_cols
+    scores = [c for c in rep_pairs.columns if c not in pair_cols]
+    mem_a = membership.select(F.col("rep_id").alias(a), F.col(id_col).alias("_ma"))
+    mem_b = membership.select(F.col("rep_id").alias(b), F.col(id_col).alias("_mb"))
+    cross = (
+        rep_pairs.join(mem_a, a)
+        .join(mem_b, b)
+        .select(
+            F.least("_ma", "_mb").alias(a), F.greatest("_ma", "_mb").alias(b), *scores
+        )
+    )
+    ga = membership.select("rep_id", F.col(id_col).alias(a))
+    gb = membership.select("rep_id", F.col(id_col).alias(b))
+    within_pairs = (
+        ga.join(gb, "rep_id")
+        .filter(F.col(a) < F.col(b))
+        .join(within, "rep_id")
+        .select(a, b, *scores)
+    )
+    return cross.unionByName(within_pairs)

@@ -4,23 +4,18 @@
 from __future__ import annotations
 
 import os
-import zipfile
+import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from pqc.session import write_package_zip  # noqa: E402
 
 
 def main() -> None:
-    pkg = os.path.join(REPO, "pqc")
     out_dir = os.path.join(REPO, "dist")
     os.makedirs(out_dir, exist_ok=True)
-    out = os.path.join(out_dir, "pqc.zip")
-    with zipfile.ZipFile(out, "w") as zf:
-        for root, _dirs, files in os.walk(pkg):
-            for fn in sorted(files):
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    zf.write(full, os.path.join("pqc", os.path.relpath(full, pkg)))
-    print(out)
+    print(write_package_zip(os.path.join(out_dir, "pqc.zip")))
 
 
 if __name__ == "__main__":

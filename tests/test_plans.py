@@ -155,7 +155,9 @@ def test_q1_map_side_partial_agg_single_shuffle(spark):
 def test_decode_island_scans_bytes_once(spark):
     """The suite's full violation plan must contain exactly one scan
     that reads the bytes column (the decode island); every other scan
-    reads the payload-free projection."""
+    reads the payload-free projection. At most one exchange carries
+    ``bytes`` — the decode guard's repartition — and only when the
+    input arrives in fewer partitions than ``defaultParallelism``."""
     from pqc.constraints import SuiteContext
     from pqc.engine import ValidationSuite
     from pqc.fixtures import cached_images_path, generate_image_dim
@@ -163,11 +165,26 @@ def test_decode_island_scans_bytes_once(spark):
     # leftover cached plans from other tests get substituted into this
     # plan (their build trees show their own scans) — measure pristine
     spark.catalog.clearCache()
-    images = spark.read.parquet(cached_images_path(spark, 2000))
-    ctx = SuiteContext(images=images, image_dim=generate_image_dim(images))
-    plan = plan_of(ValidationSuite().violation_plan(ctx))
-    byte_scans = len(re.findall(r"ReadSchema: struct<[^>]*bytes:binary", plan))
-    assert byte_scans == 1, f"expected 1 bytes-reading scan, found {byte_scans}"
+    par = spark.sparkContext.defaultParallelism
+    scan = spark.read.parquet(cached_images_path(spark, 2000))
+    assert scan.rdd.getNumPartitions() >= par  # one side of the guard each
+    for images in (scan, scan.coalesce(1)):
+        ctx = SuiteContext(images=images, image_dim=generate_image_dim(images))
+        plan = plan_of(ValidationSuite().violation_plan(ctx))
+        byte_scans = len(re.findall(r"ReadSchema: struct<[^>]*bytes:binary", plan))
+        assert byte_scans == 1, f"expected 1 bytes-reading scan, found {byte_scans}"
+        # formatted-plan node details: "(n) Name ...\nInput [k]: [cols]"
+        byte_exchanges = [
+            body
+            for name, body in re.findall(
+                r"^\(\d+\) (\w+)[^\n]*\n(.*?)(?=\n\n|\Z)", plan, re.M | re.S
+            )
+            if name.endswith("Exchange")
+            and name != "ReusedExchange"
+            and re.search(r"Input \[\d+\]: \[[^\]]*\bbytes#", body)
+        ]
+        fewer = images.rdd.getNumPartitions() < par
+        assert len(byte_exchanges) == int(fewer), byte_exchanges
 
 
 def test_no_row_python_udfs_anywhere():

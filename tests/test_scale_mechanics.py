@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from pqc.fixtures import cached_images_path
@@ -277,3 +278,131 @@ def test_srp_dup_degenerate_corpus_bounded(spark):
     expected = {(a, b) for a in range(N_DUP) for b in range(a + 1, N_DUP)}
     assert set(pairs) == expected
     assert all(abs(v - 1.0) < 1e-8 for v in pairs.values())
+
+
+# Two duplicate groups whose fingerprints are near-dups of each other,
+# a singleton neighbour of both and a far item. Member ids interleave
+# across the groups so the expanded pairs need least/greatest ordering.
+_GROUP_IDS = {"g0": (1, 4, 9), "g1": (2, 5, 7), "nb": (3,), "far": (8,)}
+
+
+def _simhash_case(spark, tmp_path):
+    from pqc.dedup import _simhash_pairs
+
+    fps = {"g0": 0x12345678, "g1": 0x12345679, "nb": 0x1234567B, "far": 0x7F0F0F0F}
+
+    def run(rows, _tag):
+        sig = spark.createDataFrame(rows, "doc_id long, simhash long")
+        return {(r["doc_a"], r["doc_b"]): r["hamming"]
+                for r in _simhash_pairs(sig).collect()}
+
+    def close(ids):
+        by_id = {i: fp for i, fp in ids}
+        return lambda x, y: bin(by_id[x] ^ by_id[y]).count("1") <= 3
+
+    return fps, run, close, lambda v: v == 0
+
+
+def _minhash_case(spark, tmp_path):
+    import pandas as pd
+
+    from pqc.dedup import (
+        JACCARD_THRESHOLD,
+        MINHASH_K,
+        MINHASH_ROWS,
+        _minhash_pairs,
+        _shingle_df,
+    )
+
+    base = ("the quick brown fox jumps over the lazy dog while the farmer "
+            "watches from the porch of the old red barn")
+    fps = {
+        "g0": base,
+        "g1": base.replace("red barn", "red shed"),
+        "nb": base.replace("old red barn", "new blue house"),
+        "far": "completely different subject matter about maritime navigation "
+               "charts and the tides of the northern coast",
+    }
+
+    def write(rows, tag) -> str:
+        pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
+        pdf["lang"] = "en"
+        pdf["source"] = "t"
+        pdf["n_chars"] = pdf["text"].str.len()
+        sf = tmp_path / tag
+        sf.mkdir()
+        pdf.to_parquet(sf / "documents.parquet")
+        return str(sf)
+
+    def run(rows, tag):
+        sf = write(rows, tag)
+        return {(r["doc_a"], r["doc_b"]): r["jaccard"]
+                for r in _minhash_pairs(spark, sf, MINHASH_K, MINHASH_ROWS).collect()}
+
+    def close(ids):
+        sets: dict = {}
+        for r in _shingle_df(spark, write(ids, "truth")).collect():
+            sets.setdefault(r["doc_id"], set()).add(r["hs"])
+        return lambda x, y: (
+            len(sets[x] & sets[y]) / len(sets[x] | sets[y]) >= JACCARD_THRESHOLD
+        )
+
+    return fps, run, close, lambda v: v == 1.0
+
+
+def _srp_case(spark, tmp_path):
+    import numpy as np
+
+    from pqc.similarity import EMB_DIM, NEAR_DUP_COS, _srp_pairs
+
+    rng = np.random.default_rng(11)
+    v0 = rng.normal(size=EMB_DIM)
+    fps = {
+        "g0": v0.tolist(),
+        "g1": (v0 + 1e-3 * rng.normal(size=EMB_DIM)).tolist(),
+        "nb": (v0 + 2e-2 * rng.normal(size=EMB_DIM)).tolist(),
+        "far": (-v0).tolist(),
+    }
+
+    def run(rows, _tag):
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        return {(r["id_a"], r["id_b"]): r["cosine"] for r in _srp_pairs(emb).collect()}
+
+    def close(ids):
+        vec = {i: np.asarray(v) for i, v in ids}
+        return lambda x, y: (
+            vec[x] @ vec[y] / np.linalg.norm(vec[x]) / np.linalg.norm(vec[y])
+            >= NEAR_DUP_COS
+        )
+
+    return fps, run, close, lambda v: abs(v - 1.0) < 1e-8
+
+
+@pytest.mark.parametrize(
+    "case", [_minhash_case, _simhash_case, _srp_case], ids=["minhash", "simhash", "srp"]
+)
+def test_rep_expansion_two_duplicate_groups(spark, tmp_path, case):
+    """Member pairs rebuilt from representative pairs equal the
+    brute-force pair set — including cross pairs between two
+    multi-member groups — and each cross pair carries exactly the score
+    the ladder gives its representatives on the de-duplicated corpus,
+    where the collapse is an identity."""
+    fps, run, close, within_ok = case(spark, tmp_path)
+    rows = [(i, fps[item]) for item, ids in _GROUP_IDS.items() for i in ids]
+    rep_of = {i: min(ids) for ids in _GROUP_IDS.values() for i in ids}
+    is_close = close(rows)
+    ids = sorted(rep_of)
+    truth = {(x, y) for x in ids for y in ids if x < y and is_close(x, y)}
+    # multi×multi cross pairs, and the neighbour pairs with both groups
+    assert {(1, 2), (4, 5), (2, 9), (7, 9), (3, 4), (3, 7)} <= truth
+
+    pairs = run(rows, "full")
+    assert set(pairs) == truth
+    dedup = run([(i, fps[item]) for item, ids in _GROUP_IDS.items()
+                 for i in ids[:1]], "dedup")
+    for (x, y), score in pairs.items():
+        rx, ry = sorted((rep_of[x], rep_of[y]))
+        if rx == ry:
+            assert within_ok(score), ((x, y), score)
+        else:
+            assert score == dedup[(rx, ry)], ((x, y), score, dedup.get((rx, ry)))
