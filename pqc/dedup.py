@@ -300,7 +300,6 @@ def _minhash_rep_candidates(
     sh: DataFrame,
     k: int = MINHASH_K,
     rows: int = MINHASH_ROWS,
-    cap: int | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Banded candidate pairs among shingle-set REPRESENTATIVES.
 
@@ -366,22 +365,16 @@ def _minhash_rep_candidates(
         "doc_id",
         F.explode(F.array(*[F.col(f"band{b}") for b in range(n_bands)])).alias("band"),
     )
-    pairs, hot = band_pairs(bk, ("band",), F.struct("doc_id"), "doc_id", cap)
+    pairs, hot = band_pairs(bk, ("band",), F.struct("doc_id"), "doc_id")
     cand = pairs.select(
         F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
     ).dropDuplicates()
     return cand, membership, hot
 
 
-def _minhash_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int,
-    rows: int,
-    cap: int | None = None,
-) -> DataFrame:
+def _minhash_pairs(spark: SparkSession, sf_dir: str, k: int, rows: int) -> DataFrame:
     sh = pin(_shingle_df(spark, sf_dir))  # reused: signatures, sizes, both verify sides
-    cand, membership, _hot = _minhash_rep_candidates(sh, k, rows, cap)
+    cand, membership, _hot = _minhash_rep_candidates(sh, k, rows)
     membership = pin(membership)
     # verify on representative shingle sets only (members share them)
     rep_sh = pin(
@@ -594,9 +587,7 @@ def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _simhash_pairs(sig)
 
 
-def _simhash_rep_candidates(
-    sig: DataFrame, cap: int | None = None
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def _simhash_rep_candidates(sig: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Banded hamming-ball candidates among DISTINCT fingerprints.
 
     Same duplicate-degeneracy layering as :func:`_minhash_rep_candidates`
@@ -626,7 +617,7 @@ def _simhash_rep_candidates(
         .select("simhash", "rep_id", "band.band_idx", "band.band_val")
     )
     pairs, hot = band_pairs(
-        bk, ("band_idx", "band_val"), F.struct("simhash", "rep_id"), "rep_id", cap
+        bk, ("band_idx", "band_val"), F.struct("simhash", "rep_id"), "rep_id"
     )
     rep_pairs = (
         pairs.select(
@@ -642,7 +633,7 @@ def _simhash_rep_candidates(
     return rep_pairs, reps, hot
 
 
-def _simhash_pairs(sig: DataFrame, cap: int | None = None) -> DataFrame:
+def _simhash_pairs(sig: DataFrame) -> DataFrame:
     """Banded hamming-ball pairs (doc_a, doc_b, hamming) from a
     (doc_id, simhash) signature table — shared by the pair query and
     the transitive clustering below. Degeneracy-guarded via
@@ -652,7 +643,7 @@ def _simhash_pairs(sig: DataFrame, cap: int | None = None) -> DataFrame:
     pairs inherit their fingerprints' hamming; identical-fingerprint
     pairs are hamming 0)."""
     sig = pin(sig)
-    rep_pairs, reps, _hot = _simhash_rep_candidates(sig, cap)
+    rep_pairs, reps, _hot = _simhash_rep_candidates(sig)
     # the screen returns only reps; the expansion needs the membership
     _, membership = collapse_reps(sig, "doc_id", "simhash")
     # ra < rb by the pair order, so on an identity collapse these rep

@@ -189,6 +189,27 @@ def _dot_sql(a: str, b: str) -> str:
     )
 
 
+def _with_norm(emb: DataFrame) -> DataFrame:
+    """``emb`` + its per-vector norm ``nrm``, computed once per vector
+    (never per pair)."""
+    return emb.withColumn("nrm", F.sqrt(_norm2(F.col("embedding"))))
+
+
+def _emb_with_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """embeddings + ``nrm``. spread(): the single-row-group parquet
+    otherwise pins the decimal norm/assignment folds to one scan task
+    (guide §2.5)."""
+    return _with_norm(spread(load_table(spark, sf_dir, "embeddings")))
+
+
+def _top_k(scored: DataFrame, k: int, score: Column) -> DataFrame:
+    """The ``k`` best rows per ``qid`` with their rank ``rk``: a
+    row_number over ``qid`` ordered ``score DESC, cid ASC`` — the
+    oracles' ranking, a total order because cid is unique per qid."""
+    w = W.partitionBy("qid").orderBy(score.desc(), F.col("cid").asc())
+    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
+
+
 _KNN_ORACLE = f"""
 WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < {N_QUERIES}),
 c AS (SELECT vec_id AS cid, embedding AS ce, label FROM embeddings),
@@ -214,20 +235,20 @@ def knn_brute_force_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Dot products run as JVM array folds (zip_with + aggregate), not
     UDFs; ranking is one window shuffle on qid.
     """
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
     # norms once per vector BEFORE the pair join (a per-pair recompute
     # triples the O(d) decimal folds — measured as the #1 testdata cost
     # in BENCH_r01; same value either way so the oracle hash holds)
+    emb = _emb_with_norm(spark, sf_dir)
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qe"),
-        F.sqrt(_norm2(F.col("embedding"))).alias("nq"),
+        F.col("nrm").alias("nq"),
     )
     c = emb.select(
         F.col("vec_id").alias("cid"),
         F.col("embedding").alias("ce"),
         "label",
-        F.sqrt(_norm2(F.col("embedding"))).alias("nc"),
+        F.col("nrm").alias("nc"),
     )
     # screen→confirm: rank ALL pairs by the cheap double fold, keep the
     # fast top-K plus everything within 2·PRESCREEN_EPS of the fast Kth
@@ -256,22 +277,8 @@ def knn_brute_force_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = surv.withColumn(
         "cos", _dot(F.col("qe"), F.col("ce")) / (F.col("nq") * F.col("nc"))
     )
-    w = W.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid").asc())
-    return (
-        scored.select(
-            "qid", "cid", "label", F.col("cos"), F.row_number().over(w).alias("rk")
-        )
-        .filter(F.col("rk") <= KNN_K)
-        .select("qid", "cid", "label", F.round("cos", 8).alias("cosine"), "rk")
-    )
-
-
-def _emb_with_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings + per-vector norm, computed once (never per pair).
-    spread(): the single-row-group parquet otherwise pins the decimal
-    norm/assignment folds to one scan task (guide §2.5)."""
-    return spread(load_table(spark, sf_dir, "embeddings")).withColumn(
-        "nrm", F.sqrt(_norm2(F.col("embedding")))
+    return _top_k(scored, KNN_K, F.col("cos")).select(
+        "qid", "cid", "label", F.round("cos", 8).alias("cosine"), "rk"
     )
 
 
@@ -299,21 +306,14 @@ def _argmax_assign(emb: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
-def _ivf_assign(emb: DataFrame) -> DataFrame:
-    """(vec_id, centroid_id): nearest of the K ≈ √n deterministic
-    centroids (the first K vectors). Broadcast join against K
-    centroids — a linear scan; the only shuffle is the per-vector
-    argmax aggregate (map-side combined, see _argmax_assign)."""
-    cent = emb.filter(F.col("vec_id") < IVF_N_CENTROIDS).select(
+def _seed_centroids(emb: DataFrame) -> DataFrame:
+    """(centroid_id, ce, cn): the K ≈ √n deterministic seed centroids,
+    the first K vectors of ``emb`` (which carries ``nrm``)."""
+    return emb.filter(F.col("vec_id") < IVF_N_CENTROIDS).select(
         F.col("vec_id").alias("centroid_id"),
         F.col("embedding").alias("ce"),
         F.col("nrm").alias("cn"),
     )
-    return _argmax_assign(emb, cent)
-
-
-# (moved below EMB_DIM — the trained-centroid oracle needs
-# _TRAINED_CENT_SQL; see ivf_ann_topk)
 
 
 EMB_DIM = 64
@@ -388,45 +388,32 @@ SELECT qid, cid, ROUND(cos, 8) AS cosine, rk FROM (
 """
 
 
-def _lloyd_refined_centroids(emb: DataFrame, iters: int = 1) -> DataFrame:
-    """``iters`` Lloyd iterations from the deterministic seed
-    centroids: assign every vector (cosine argmax), then per-dimension
-    decimal-exact means → (centroid_id, ce, cn). The driver queries
-    pin iters=1 (the DuckDB oracle mirrors exactly one round); the
-    iteration count is the trained-quality dial — on a clustered
-    corpus, 3 rounds lift 2-probe recall@5 from 0.70 to 0.94
-    (BASELINE.md §ivf). The 100 TB version trains on a sample with
-    more rounds; the plan shape per round (broadcast assign → one
-    posexplode aggregate, all map-side-combinable) is unchanged."""
-    cent = None  # round 0 assigns against the raw seed vectors
-    for _ in range(iters):
-        if cent is None:
-            assign = _ivf_assign(emb)
-        else:
-            assign = _argmax_assign(emb, cent)
-        dims = (
-            emb.join(assign, "vec_id")
-            .select("centroid_id", F.posexplode("embedding").alias("i", "val"))
-            .groupBy("centroid_id", "i")
-            .agg(
-                (
-                    F.sum(F.col("val").cast("double").cast("decimal(38,12)")).cast(
-                        "double"
-                    )
-                    / F.count(F.lit(1))
-                ).alias("v")
-            )
+def _lloyd_refined_centroids(emb: DataFrame) -> DataFrame:
+    """One Lloyd iteration from the deterministic seed centroids (the
+    DuckDB oracle mirrors exactly one round): assign every vector
+    (cosine argmax), then per-dimension decimal-exact means →
+    (centroid_id, ce, cn). The plan (broadcast assign → one posexplode
+    aggregate) is map-side-combinable throughout."""
+    assign = _argmax_assign(emb, _seed_centroids(emb))
+    dims = (
+        emb.join(assign, "vec_id")
+        .select("centroid_id", F.posexplode("embedding").alias("i", "val"))
+        .groupBy("centroid_id", "i")
+        .agg(
+            (
+                F.sum(F.col("val").cast("double").cast("decimal(38,12)")).cast(
+                    "double"
+                )
+                / F.count(F.lit(1))
+            ).alias("v")
         )
-        cent = (
-            dims.groupBy("centroid_id")
-            .agg(F.array_sort(F.collect_list(F.struct("i", "v"))).alias("sv"))
-            .select(
-                "centroid_id",
-                F.transform("sv", lambda x: x["v"]).alias("ce"),
-            )
-            .withColumn("cn", F.sqrt(_norm2(F.col("ce"))))
-        )
-    return cent
+    )
+    return (
+        dims.groupBy("centroid_id")
+        .agg(F.array_sort(F.collect_list(F.struct("i", "v"))).alias("sv"))
+        .select("centroid_id", F.transform("sv", lambda x: x["v"]).alias("ce"))
+        .withColumn("cn", F.sqrt(_norm2(F.col("ce"))))
+    )
 
 
 _IVF_ORACLE = f"""
@@ -469,14 +456,14 @@ SELECT qid, centroid_id, cid, ROUND(cos, 8) AS cosine, rk FROM (
 # cache-key token for the persisted IVF index: bump on ANY change to
 # _lloyd_refined_centroids / seed selection, or warm caches silently
 # serve centroids trained by the old code
-_IVF_INDEX_VERSION = "v2"
+_IVF_INDEX_VERSION = "v3"
 
 
 def _cached_trained_centroids(
-    spark: SparkSession, sf_dir: str, emb: DataFrame, iters: int = 1
+    spark: SparkSession, sf_dir: str, emb: DataFrame
 ) -> DataFrame:
     """Trained centroids with the production build/query split: train
-    ONCE per (embeddings identity, iters) and persist the index to
+    ONCE per embeddings identity and persist the index to
     parquet; every subsequent ANN query reads the ~K-row index instead
     of re-running Lloyd. Centroid values are decimal-exact and fully
     deterministic, and parquet round-trips doubles bit-exactly, so the
@@ -495,15 +482,64 @@ def _cached_trained_centroids(
     st = os.stat(src)
     key = (
         f"{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{st.st_size}_{int(st.st_mtime)}_k{IVF_N_CENTROIDS}_i{iters}"
+        f"_{st.st_size}_{int(st.st_mtime)}_k{IVF_N_CENTROIDS}"
         f"_{_IVF_INDEX_VERSION}"
     )
     path = f"/tmp/pqc_fixtures/ivf_cent_{key}"
     if not os.path.exists(f"{path}/_SUCCESS"):
         tmp = f"{path}.build{os.getpid()}"
-        _lloyd_refined_centroids(emb, iters).write.mode("overwrite").parquet(tmp)
+        _lloyd_refined_centroids(emb).write.mode("overwrite").parquet(tmp)
         publish_dir(tmp, path)
     return spark.read.parquet(path)
+
+
+def _ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
+    """Top-5 IVF neighbours of each query over its ``nprobe`` nearest
+    TRAINED buckets → (qid, centroid_id, cid, cosine, rk).
+
+    The corpus is bucketed by the map-side-combined ``max_by`` argmax
+    (:func:`_argmax_assign`: one shuffled row per vector, no sort over
+    n×K scored rows). Only the 10 query vectors rank all K centroids,
+    with a window ordered ``acos DESC, centroid_id ASC`` as in the
+    oracle; rank 1 is the query's own bucket. Each cid lives in one
+    bucket, so a query meets every candidate at most once across its
+    probes."""
+    emb = pin(_emb_with_norm(spark, sf_dir))
+    cent = _cached_trained_centroids(spark, sf_dir, emb)
+    bucket = emb.join(_argmax_assign(emb, cent), "vec_id").select(
+        F.col("vec_id").alias("cid"),
+        F.col("embedding").alias("ce"),
+        F.col("nrm").alias("nc"),
+        "centroid_id",
+    )
+    probe = W.partitionBy("qid").orderBy(
+        F.col("acos").desc(), F.col("centroid_id").asc()
+    )
+    q = (
+        emb.filter((F.col("vec_id") >= IVF_QUERY_LO) & (F.col("vec_id") < IVF_QUERY_HI))
+        .select(
+            F.col("vec_id").alias("qid"),
+            F.col("embedding").alias("qe"),
+            F.col("nrm").alias("nq"),
+        )
+        .crossJoin(F.broadcast(cent))
+        .withColumn(
+            "acos", _dot(F.col("qe"), F.col("ce")) / (F.col("nq") * F.col("cn"))
+        )
+        .withColumn("probe", F.row_number().over(probe))
+        .filter(F.col("probe") <= nprobe)
+        .select("qid", "qe", "nq", "centroid_id")
+    )
+    scored = (
+        bucket.join(F.broadcast(q), "centroid_id")
+        .filter(F.col("qid") != F.col("cid"))
+        .withColumn(
+            "cos", _dot(F.col("qe"), F.col("ce")) / (F.col("nq") * F.col("nc"))
+        )
+    )
+    return _top_k(scored, 5, F.col("cos")).select(
+        "qid", "centroid_id", "cid", F.round("cos", 8).alias("cosine"), "rk"
+    )
 
 
 @register("ivf_ann_topk", oracle=_IVF_ORACLE)
@@ -524,40 +560,7 @@ def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the reference prescreen (SURVEY §3.3). `ivf_multiprobe_topk`
     adds the nprobe recall dial on the same trained index.
     """
-    emb = pin(_emb_with_norm(spark, sf_dir))
-    cent = _cached_trained_centroids(spark, sf_dir, emb)
-    assign = pin(_argmax_assign(emb, cent))
-    q = (
-        emb.join(assign, "vec_id")
-        .filter((F.col("vec_id") >= IVF_QUERY_LO) & (F.col("vec_id") < IVF_QUERY_HI))
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("nq"),
-            "centroid_id",
-        )
-    )
-    bucket = emb.join(assign, "vec_id").select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("nc"),
-        "centroid_id",
-    )
-    scored = (
-        bucket.join(F.broadcast(q), "centroid_id")
-        .filter(F.col("qid") != F.col("cid"))
-        .withColumn(
-            "cos", _dot(F.col("qe"), F.col("ce")) / (F.col("nq") * F.col("nc"))
-        )
-    )
-    wtop = W.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid").asc())
-    return (
-        scored.select(
-            "qid", "centroid_id", "cid", "cos", F.row_number().over(wtop).alias("rk")
-        )
-        .filter(F.col("rk") <= 5)
-        .select("qid", "centroid_id", "cid", F.round("cos", 8).alias("cosine"), "rk")
-    )
+    return _ivf_topk(spark, sf_dir, 1)
 
 
 @register("ivf_multiprobe_topk", oracle=_MULTIPROBE_ORACLE)
@@ -574,58 +577,7 @@ def ivf_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     count becomes the recall/latency dial. The trained index comes
     from the persisted build/query-split cache
     (_cached_trained_centroids) shared with ivf_ann_topk."""
-    emb = pin(_emb_with_norm(spark, sf_dir))
-    cent = _cached_trained_centroids(spark, sf_dir, emb)
-    wassign = W.partitionBy("vec_id").orderBy(
-        F.col("acos").desc(), F.col("centroid_id").asc()
-    )
-    scored_assign = pin(
-        emb.crossJoin(F.broadcast(cent))
-        .withColumn(
-            "acos",
-            _dot(F.col("embedding"), F.col("ce")) / (F.col("nrm") * F.col("cn")),
-        )
-        .select("vec_id", "centroid_id", F.row_number().over(wassign).alias("rk"))
-    )
-    bucket = emb.join(
-        scored_assign.filter(F.col("rk") == 1).select("vec_id", "centroid_id"),
-        "vec_id",
-    ).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce2"),
-        F.col("nrm").alias("nc"),
-        "centroid_id",
-    )
-    probes = (
-        emb.filter(
-            (F.col("vec_id") >= IVF_QUERY_LO) & (F.col("vec_id") < IVF_QUERY_HI)
-        )
-        .join(
-            scored_assign.filter(F.col("rk") <= IVF_NPROBE).select(
-                "vec_id", "centroid_id"
-            ),
-            "vec_id",
-        )
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qe"),
-            F.col("nrm").alias("nq"),
-            "centroid_id",
-        )
-    )
-    scored = (
-        bucket.join(F.broadcast(probes), "centroid_id")
-        .filter(F.col("qid") != F.col("cid"))
-        .withColumn(
-            "cos", _dot(F.col("qe"), F.col("ce2")) / (F.col("nq") * F.col("nc"))
-        )
-    )
-    wtop = W.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid").asc())
-    return (
-        scored.select("qid", "cid", "cos", F.row_number().over(wtop).alias("rk"))
-        .filter(F.col("rk") <= 5)
-        .select("qid", "cid", F.round("cos", 8).alias("cosine"), "rk")
-    )
+    return _ivf_topk(spark, sf_dir, IVF_NPROBE).drop("centroid_id")
 
 
 NEAR_DUP_COS = 0.95
@@ -679,6 +631,61 @@ def _augmented_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.unionByName(copies)
 
 
+def _cosine_confirm(
+    cand: DataFrame, vecs: DataFrame, on: tuple[str, ...] = ()
+) -> DataFrame:
+    """The confirm step of every embedding near-dup ladder →
+    (id_a, id_b, *on, cosine).
+
+    ``cand`` holds screened (id_a, id_b) pairs; ``vecs`` is
+    (vec_id, embedding, nrm, *on). Side b joins on ``["id_b", *on]``,
+    so a pair whose sides disagree on ``on`` (e.g. two buckets) drops
+    out in the join. Survivors pass the ``_dot_fast`` double-fold screen
+    at ``NEAR_DUP_COS − PRESCREEN_EPS`` (a provable superset, see
+    ``_dot_fast``), then the decimal-exact cosine decides and is
+    rounded to 8 digits, as in every oracle."""
+
+    def side(s: str) -> DataFrame:
+        return vecs.select(
+            F.col("vec_id").alias(f"id_{s}"),
+            F.col("embedding").alias(f"e{s}"),
+            F.col("nrm").alias(f"n{s}"),
+            *on,
+        )
+
+    def cos(dot) -> Column:
+        return dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
+
+    return (
+        cand.join(side("a"), "id_a")
+        .join(side("b"), ["id_b", *on])
+        .filter(cos(_dot_fast) >= NEAR_DUP_COS - PRESCREEN_EPS)
+        .withColumn("cos", cos(_dot))
+        .filter(F.col("cos") >= NEAR_DUP_COS)
+        .select("id_a", "id_b", *on, F.round("cos", 8).alias("cosine"))
+    )
+
+
+def _in_bucket_near_dups(emb: DataFrame, cent: DataFrame) -> DataFrame:
+    """(id_a, id_b, centroid_id, cosine): near-dup pairs that share
+    their nearest centroid in ``cent``.
+
+    The blocked-matmul screen runs over the WHOLE corpus: its survivors
+    are a superset of every pair with exact cos ≥ 0.95, so survivors ∩
+    same-bucket ≡ the oracle's in-bucket pair set. The exact assignment
+    then runs only for the candidate ids (the argmax is per-vector, so
+    restricting its input cannot change any assigned value)."""
+    cand = pin(_numpy_pair_candidates(emb, NEAR_DUP_COS))
+    ids = (
+        cand.select(F.col("id_a").alias("vec_id"))
+        .unionByName(cand.select(F.col("id_b").alias("vec_id")))
+        .dropDuplicates()
+    )
+    sub = emb.join(ids, "vec_id", "left_semi")
+    side = sub.join(_argmax_assign(sub, cent), "vec_id")
+    return _cosine_confirm(cand, side, on=("centroid_id",))
+
+
 _EMB_ND_ORACLE = f"""
 WITH {_AUG_EMB_SQL},
 e AS (SELECT vec_id, embedding FROM aug
@@ -706,8 +713,11 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ND_SEED_IDS) so the driver row checks real pairs, not an empty
     set — r3's 0-row hash match was vacuous evidence."""
     emb = pin(
-        _augmented_embeddings(spark, sf_dir).filter(
-            (F.col("vec_id") < NEAR_DUP_SCOPE) | (F.col("vec_id") >= ND_COPY_OFFSET)
+        _with_norm(
+            _augmented_embeddings(spark, sf_dir).filter(
+                (F.col("vec_id") < NEAR_DUP_SCOPE)
+                | (F.col("vec_id") >= ND_COPY_OFFSET)
+            )
         )
     )
     # screen→confirm: the blocked-matmul screen prunes the ~n²/2
@@ -716,24 +726,7 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # was the same screen at ~15 µs/pair, quadratic in Catalyst); the
     # decimal-exact oracle-grade cosine is then computed only for
     # survivors, so the result set is bit-identical.
-    cand = _numpy_pair_candidates(emb, NEAR_DUP_COS)
-    a = emb.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("ea"),
-        F.sqrt(_norm2(F.col("embedding"))).alias("na"),
-    )
-    b = emb.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("eb"),
-        F.sqrt(_norm2(F.col("embedding"))).alias("nb"),
-    )
-    pairs = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("cos", _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")))
-        .filter(F.col("cos") >= NEAR_DUP_COS)
-    )
-    return pairs.select("id_a", "id_b", F.round("cos", 8).alias("cosine"))
+    return _cosine_confirm(_numpy_pair_candidates(emb, NEAR_DUP_COS), emb)
 
 
 _EMB_ND_BUCKETED_ORACLE = f"""
@@ -785,57 +778,8 @@ def embedding_near_dup_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle mirrors the same bucketing so the contract is explicit.
     Runs over the seeded-near-dup corpus (ND_SEED_IDS) so the driver
     row checks real in-bucket pairs rather than an empty set."""
-    emb = pin(
-        _augmented_embeddings(spark, sf_dir).withColumn(
-            "nrm", F.sqrt(_norm2(F.col("embedding")))
-        )
-    )
-    # blocked-matmul screen over the WHOLE corpus: its survivors are a
-    # superset of every pair with exact cos ≥ 0.95, so
-    # survivors ∩ same-bucket ≡ the oracle's in-bucket pair set — and
-    # the expensive exact assignment now runs only for the handful of
-    # candidate ids (the argmax is per-vector, so restricting the
-    # assignment input cannot change any assigned value)
-    cand = pin(_numpy_pair_candidates(emb, NEAR_DUP_COS))
-    cand_ids = (
-        cand.select(F.col("id_a").alias("vec_id"))
-        .unionByName(cand.select(F.col("id_b").alias("vec_id")))
-        .dropDuplicates()
-    )
-    sub = emb.join(cand_ids, "vec_id", "left_semi")
-    cent = emb.filter(F.col("vec_id") < IVF_N_CENTROIDS).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    side = sub.join(_argmax_assign(sub, cent), "vec_id")
-    a = side.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
-        F.col("centroid_id").alias("ca"),
-    )
-    b = side.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"),
-        F.col("centroid_id").alias("cb"),
-    )
-    pairs = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .filter(F.col("ca") == F.col("cb"))
-        .withColumn(
-            "cos", _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
-        )
-        .filter(F.col("cos") >= NEAR_DUP_COS)
-    )
-    return pairs.select(
-        "id_a",
-        "id_b",
-        F.col("ca").alias("centroid_id"),
-        F.round("cos", 8).alias("cosine"),
-    )
+    emb = pin(_with_norm(_augmented_embeddings(spark, sf_dir)))
+    return _in_bucket_near_dups(emb, _seed_centroids(emb))
 
 
 def _trained_cent_sql_over(table: str) -> str:
@@ -888,50 +832,11 @@ def embedding_near_dup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbours (recall table in BASELINE.md §ivf), so the prefilter
     misses fewer straddling pairs at the same probe budget. The oracle
     mirrors the full train→assign→pair→confirm chain in SQL."""
-    emb = pin(
-        _augmented_embeddings(spark, sf_dir).withColumn(
-            "nrm", F.sqrt(_norm2(F.col("embedding")))
-        )
-    )
     # training stays full-corpus (the centroid VALUES depend on every
     # vector); only the post-training assignment shrinks to the blocked
-    # screen's candidate ids — see embedding_near_dup_bucketed
-    cent = _lloyd_refined_centroids(emb, 1)
-    cand = pin(_numpy_pair_candidates(emb, NEAR_DUP_COS))
-    cand_ids = (
-        cand.select(F.col("id_a").alias("vec_id"))
-        .unionByName(cand.select(F.col("id_b").alias("vec_id")))
-        .dropDuplicates()
-    )
-    sub = emb.join(cand_ids, "vec_id", "left_semi")
-    side = sub.join(_argmax_assign(sub, cent), "vec_id")
-    a = side.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
-        F.col("centroid_id").alias("ca"),
-    )
-    b = side.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"),
-        F.col("centroid_id").alias("cb"),
-    )
-    pairs = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .filter(F.col("ca") == F.col("cb"))
-        .withColumn(
-            "cos", _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
-        )
-        .filter(F.col("cos") >= NEAR_DUP_COS)
-    )
-    return pairs.select(
-        "id_a",
-        "id_b",
-        F.col("ca").alias("centroid_id"),
-        F.round("cos", 8).alias("cosine"),
-    )
+    # screen's candidate ids — see _in_bucket_near_dups
+    emb = pin(_with_norm(_augmented_embeddings(spark, sf_dir)))
+    return _in_bucket_near_dups(emb, _lloyd_refined_centroids(emb))
 
 
 _NORM_ORACLE = f"""
@@ -1074,24 +979,24 @@ def srp_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _srp_pairs(_augmented_embeddings(spark, sf_dir))
 
 
-def _srp_rep_candidates(
-    emb: DataFrame, cap: int | None = None
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """SRP band candidates among DISTINCT vectors (r4 verdict #1: the
-    band self-join was uncapped). Identical vectors — the dominant mass
-    of a duplicate-heavy corpus, and all landing in ONE bucket since
-    the code is a function of the vector — collapse to min(vec_id)
-    representatives before banding; the representative band table then
-    goes through the hot-bucket cap (:func:`pqc.skew.band_pairs`:
-    bucket sizes counted, hot buckets diverted before collection) as
-    the backstop for near-identical-but-distinct pileups. Exact: cosine
-    is a function of the two vectors alone, so member pairs inherit their
-    representatives' score (reconstructed by
-    :func:`pqc.skew.expand_rep_pairs` in :func:`_srp_pairs`).
+def _srp_rep_candidates(emb: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Confirmed SRP near-dup pairs among DISTINCT vectors (r4 verdict
+    #1: the band self-join was uncapped). Identical vectors — the
+    dominant mass of a duplicate-heavy corpus, and all landing in ONE
+    bucket since the code is a function of the vector — collapse to
+    min(vec_id) representatives before banding; the representative
+    band table then goes through the hot-bucket cap
+    (:func:`pqc.skew.band_pairs`: bucket sizes counted, hot buckets
+    diverted before collection) as the backstop for
+    near-identical-but-distinct pileups, and the band collisions go
+    through :func:`_cosine_confirm`. Exact: cosine is a function of the
+    two vectors alone, so member pairs inherit their representatives'
+    score (reconstructed by :func:`pqc.skew.expand_rep_pairs` in
+    :func:`_srp_pairs`).
 
-    Returns ``(cand, membership, hot)``: cand carries representative
-    pair ids + vectors + norms; membership is ``(vkey, vec_id, rep_id)``
-    (:func:`pqc.skew.collapse_reps`).
+    Returns ``(rep_pairs, membership, hot)``: rep_pairs is
+    ``(id_a, id_b, cosine)`` over representatives; membership is
+    ``(vkey, vec_id, rep_id)`` (:func:`pqc.skew.collapse_reps`).
     """
     vkey = hash64(
         F.concat_ws(",", F.transform(F.col("embedding"), lambda x: x.cast("string")))
@@ -1100,9 +1005,11 @@ def _srp_rep_candidates(
     reps, membership = collapse_reps(keyed, "vec_id", "vkey")
     # pinned: feeds the SRP codes AND the post-dedup vector re-attach
     rep_vecs = pin(
-        keyed.join(
-            reps.select(F.col("rep_id").alias("vec_id")), "vec_id", "left_semi"
-        ).withColumn("nrm", F.sqrt(_norm2(F.col("embedding"))))
+        _with_norm(
+            keyed.join(
+                reps.select(F.col("rep_id").alias("vec_id")), "vec_id", "left_semi"
+            )
+        )
     )
     sig = rep_vecs.select("vec_id", _srp_code(F.col("embedding")).alias("code"))
     # the band table and its self-join carry ONLY (vec_id, band) — the
@@ -1127,38 +1034,15 @@ def _srp_rep_candidates(
             )
         ).alias("band"),
     ).select("vec_id", "band.band_idx", "band.band_val")
-    pairs, hot = band_pairs(
-        bk, ("band_idx", "band_val"), F.struct("vec_id"), "vec_id", cap
-    )
+    pairs, hot = band_pairs(bk, ("band_idx", "band_val"), F.struct("vec_id"), "vec_id")
     id_pairs = pairs.select(
         F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b")
     ).dropDuplicates(["id_a", "id_b"])
-    va = rep_vecs.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    vb = rep_vecs.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    cand = id_pairs.join(va, "id_a").join(vb, "id_b")
-    return cand, membership, hot
+    return _cosine_confirm(id_pairs, rep_vecs), membership, hot
 
 
-def _srp_pairs(emb: DataFrame, cap: int | None = None) -> DataFrame:
-    cand, membership, _hot = _srp_rep_candidates(emb, cap)
-    membership = pin(membership)
-    rep_pairs = (
-        cand.withColumn(
-            "acos", _dot_fast(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
-        )
-        .filter(F.col("acos") >= NEAR_DUP_COS - PRESCREEN_EPS)
-        .withColumn("cos", _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")))
-        .filter(F.col("cos") >= NEAR_DUP_COS)
-        .select("id_a", "id_b", F.round("cos", 8).alias("cosine"))
-    )
+def _srp_pairs(emb: DataFrame) -> DataFrame:
+    rep_pairs, membership, _hot = _srp_rep_candidates(emb)
     # within-group pairs: identical vectors, scored with the SAME
     # expression the oracle evaluates for them — dot(v,v)/(√·√) on the
     # group's vector (decimal fold + IEEE sqrt: bit-identical both
@@ -1175,7 +1059,9 @@ def _srp_pairs(emb: DataFrame, cap: int | None = None) -> DataFrame:
         .filter(F.col("cos_raw") >= NEAR_DUP_COS)
         .select("rep_id", F.round("cos_raw", 8).alias("cosine"))
     )
-    return expand_rep_pairs(rep_pairs, membership, "vec_id", ("id_a", "id_b"), within)
+    return expand_rep_pairs(
+        rep_pairs, pin(membership), "vec_id", ("id_a", "id_b"), within
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1283,19 +1169,7 @@ def quantized_knn_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("idot", idot)
         .withColumn("ss", F.col("sa") * F.col("sb"))
     )
-    wtop = W.partitionBy("qid").orderBy(
-        (F.col("ss") * F.col("idot")).desc(), F.col("cid").asc()
-    )
-    return (
-        scored.select(
-            "qid", "cid", "idot", "ss", F.row_number().over(wtop).alias("rk")
-        )
-        .filter(F.col("rk") <= 5)
-        .select(
-            "qid",
-            "cid",
-            "idot",
-            F.round(F.col("ss") * F.col("idot"), 8).alias("qscore"),
-            "rk",
-        )
+    qscore = F.col("ss") * F.col("idot")
+    return _top_k(scored, 5, qscore).select(
+        "qid", "cid", "idot", F.round(qscore, 8).alias("qscore"), "rk"
     )

@@ -208,15 +208,39 @@ def test_similarity_queries_never_plan_cartesian(spark):
     the only nested-loop allowed is the deliberate bounded broadcast
     (query-set or centroid set), never an unbounded CartesianProduct."""
     for name in (
+        "knn_brute_force_cosine",
+        "ivf_ann_topk",
+        "ivf_multiprobe_topk",
+        "embedding_near_dup_pairs",
         "embedding_near_dup_bucketed",
         "embedding_near_dup_trained",
-        "ivf_multiprobe_topk",
+        "quantized_knn_topk",
         "simhash_near_dup_pairs",
         "minhash_lsh_dedup",
         "srp_lsh_near_dup",
     ):
         plan = plan_of(REGISTRY[name].fn(spark, SF_DIR_SMALL))
         assert "CartesianProduct" not in plan, name
+
+
+@pytest.mark.parametrize("name", ["ivf_ann_topk", "ivf_multiprobe_topk"])
+def test_ivf_buckets_corpus_by_max_by_aggregate(spark, name):
+    """Both IVF queries bucket the corpus with the map-side-combined
+    ``max_by`` argmax aggregate (one shuffled row per vector), and no
+    window partitions by ``vec_id``: only the query vectors rank the K
+    centroids, never the whole corpus × K."""
+    df = REGISTRY[name].fn(spark, SF_DIR_SMALL)
+    nodes = list(_subtree(df._jdf.queryExecution().sparkPlan()))
+    assert any(
+        "Aggregate" in n.nodeName()
+        and "max_by" in n.simpleString(100)
+        and _names(n.groupingExpressions()) == {"vec_id"}
+        for n in nodes
+    ), name
+    windows = [n for n in nodes if n.nodeName() == "Window"]
+    assert windows, name
+    for w in windows:
+        assert "vec_id" not in _names(w.partitionSpec()), name
 
 
 def test_competitor_widen_then_trim_single_token_join(spark):

@@ -37,13 +37,15 @@ def _pair_at_cosine(rng, dim, cos):
 def test_numpy_pair_screen_is_superset_at_threshold(spark):
     """Pairs constructed at cosines straddling 0.95 within 1e-7: the
     blocked screen must keep every pair whose EXACT decimal cosine
-    passes, and the confirm must reject the rest — the final set equals
-    the brute-force decimal computation."""
+    passes, and the shared confirm (`_cosine_confirm`) must reject the
+    rest — the final set equals the brute-force decimal computation."""
     from pqc.similarity import (
         NEAR_DUP_COS,
+        _cosine_confirm,
         _dot,
         _norm2,
         _numpy_pair_candidates,
+        _with_norm,
     )
 
     rng = np.random.default_rng(42)
@@ -62,6 +64,11 @@ def test_numpy_pair_screen_is_superset_at_threshold(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     cand = _numpy_pair_candidates(emb, NEAR_DUP_COS)
+    got = {
+        (r["id_a"], r["id_b"]): r["cosine"]
+        for r in _cosine_confirm(cand, _with_norm(emb)).collect()
+    }
+    # brute-force decimal-exact truth over ALL pairs (the r5 plan)
     a = emb.select(
         F.col("vec_id").alias("id_a"),
         F.col("embedding").alias("ea"),
@@ -72,19 +79,12 @@ def test_numpy_pair_screen_is_superset_at_threshold(spark):
         F.col("embedding").alias("eb"),
         F.sqrt(_norm2(F.col("embedding"))).alias("nb"),
     )
-    got = {
-        (r["id_a"], r["id_b"]): r["cos"]
-        for r in cand.join(a, "id_a").join(b, "id_b")
-        .withColumn("cos", _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")))
-        .filter(F.col("cos") >= NEAR_DUP_COS)
-        .collect()
-    }
-    # brute-force decimal-exact truth over ALL pairs (the r5 plan)
     truth = {
-        (r["id_a"], r["id_b"]): r["cos"]
+        (r["id_a"], r["id_b"]): r["cosine"]
         for r in a.join(b, F.col("id_a") < F.col("id_b"))
         .withColumn("cos", _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")))
         .filter(F.col("cos") >= NEAR_DUP_COS)
+        .select("id_a", "id_b", F.round("cos", 8).alias("cosine"))
         .collect()
     }
     assert set(got) == set(truth)
