@@ -920,28 +920,15 @@ def _catalog_path() -> str:
 
 
 def _ensure_catalog(spark: SparkSession) -> str:
-    import os
+    from pqc.fixtures import ensure_generated_parquet
 
-    from pqc.session import _ship_package
-
-    _ship_package(spark)
-    path = _catalog_path()
-    if not os.path.exists(path + "/_SUCCESS"):
-        from collections.abc import Iterator
-
-        import pandas as pd
-
-        def gen(batches: "Iterator[pd.DataFrame]"):
-            for pdf in batches:
-                yield pd.DataFrame([_catalog_row(int(i)) for i in pdf["id"]])
-
-        (
-            spark.range(0, N_CATALOG_ROWS, numPartitions=8)
-            .mapInPandas(gen, schema="row_id long, claims string, ingredients string")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    return path
+    return ensure_generated_parquet(
+        spark,
+        _catalog_path(),
+        N_CATALOG_ROWS,
+        _catalog_row,
+        "row_id long, claims string, ingredients string",
+    )
 
 
 def _ff_bulk_oracle() -> str:

@@ -3,16 +3,19 @@
 Each constraint is a plan-builder: ``fn(ctx) -> violations DataFrame``
 with the uniform columns ``(image_id, part, constraint, detail)`` —
 the engine's typed version of the reference's failed-rows output
-(`app.py:1516-1521`). The Suite unions all violation plans lazily and
-derives per-partition verdicts in a single action (SURVEY §3.1 "Spark
-shape").
+(`app.py:1516-1521`). Row-local checks are declared once, as
+``(constraint, failed, detail)`` triples, and evaluated by
+``flag_rows``; each module exports the names it emits (``NAMES`` or
+``NAME``). The Suite unions all violation plans lazily and derives
+per-partition verdicts in a single action (SURVEY §3.1 "Spark shape").
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 VIOLATION_COLS = ("image_id", "part", "constraint", "detail")
@@ -82,3 +85,26 @@ def as_violation(df: DataFrame, constraint: str, detail_col) -> DataFrame:
         F.lit(constraint).alias("constraint"),
         detail_col.cast("string").alias("detail"),
     )
+
+
+def flag_rows(df: DataFrame, checks: Sequence[tuple[str, Column, Column]]) -> DataFrame:
+    """All row-local ``(constraint, failed, detail)`` checks in ONE pass
+    over ``df``: an array of (constraint, detail) structs gated by
+    ``when(failed)``, null entries filtered, exploded. One plan instead
+    of one per check — plan-count latency dominates small batches and
+    per-partition resume runs."""
+    flags = F.array(
+        *[
+            F.when(
+                failed,
+                F.struct(
+                    F.lit(name).alias("constraint"),
+                    detail.cast("string").alias("detail"),
+                ),
+            )
+            for name, failed, detail in checks
+        ]
+    )
+    return df.select(
+        "image_id", "part", F.explode(F.filter(flags, lambda v: v.isNotNull())).alias("v")
+    ).select("image_id", "part", "v.*")

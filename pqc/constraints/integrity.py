@@ -14,130 +14,69 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pqc.constraints import SuiteContext, as_violation
+from pqc.constraints import SuiteContext, flag_rows
 from pqc.image.codec import SUPPORTED_FORMATS
+
+# the payload-presence check rides the decode island's scan so no
+# other plan ever reads the bytes column
+NOT_NULL_BYTES = "not_null:bytes"
+NAMES = (
+    NOT_NULL_BYTES,
+    "integrity:decode",
+    "integrity:two_pass_agreement",
+    "integrity:dims_cross_check",
+    "integrity:psnr>=40dB",
+    "integrity:phash_cross_check",
+)
 
 
 def _decodable(ctx: SuiteContext) -> DataFrame:
     return ctx.integrity().filter(F.col("fmt").isin(*sorted(SUPPORTED_FORMATS)))
 
 
-def decode_violations(ctx: SuiteContext) -> DataFrame:
-    # null payloads are flagged by not_null:bytes, not re-flagged here
-    bad = _decodable(ctx).filter(
-        ~F.col("decode_ok") & (F.col("decode_error") != "null payload")
-    )
-    return as_violation(bad, "integrity:decode", F.col("decode_error"))
-
-
-def two_pass_violations(ctx: SuiteContext) -> DataFrame:
-    bad = _decodable(ctx).filter(F.col("decode_ok") & ~F.col("two_pass_ok"))
-    return as_violation(bad, "integrity:two_pass_agreement", F.lit("passes disagree"))
-
-
-def dims_cross_violations(ctx: SuiteContext) -> DataFrame:
-    bad = _decodable(ctx).filter(F.col("decode_ok") & ~F.col("dims_match"))
-    return as_violation(
-        bad,
-        "integrity:dims_cross_check",
-        F.concat(
-            F.lit("declared "),
-            F.col("w").cast("string"),
-            F.lit("×"),
-            F.col("h").cast("string"),
-            F.lit(" actual "),
-            F.col("actual_w").cast("string"),
-            F.lit("×"),
-            F.col("actual_h").cast("string"),
-        ),
-    )
-
-
-def psnr_violations(ctx: SuiteContext) -> DataFrame:
-    bad = _decodable(ctx).filter(F.col("decode_ok") & ~F.col("psnr_ok"))
-    return as_violation(
-        bad,
-        "integrity:psnr>=40dB",
-        F.concat(F.lit("psnr_regen="), F.round(F.col("psnr_regen"), 2).cast("string")),
-    )
-
-
 def combined_violations(ctx: SuiteContext) -> DataFrame:
-    """All five integrity gates in ONE pass over the cached decode
-    island output (same collapse rationale as ranges.combined_violations)."""
-    d = _decodable(ctx)
-
-    def entry(cond, name, detail):
-        return F.when(
-            cond,
-            F.struct(
-                F.lit(name).alias("constraint"), detail.cast("string").alias("detail")
-            ),
-        )
-
+    """All five integrity gates and the payload-presence check in ONE
+    pass over the cached decode island output."""
+    _, decode, two_pass, dims, psnr, phash = NAMES
     ok = F.col("decode_ok")
-    checks = F.array(
-        # the payload-presence check rides the decode island's scan so
-        # no other plan ever reads the bytes column
-        entry(
-            F.col("decode_error") == "null payload",
-            "not_null:bytes",
-            F.lit("null payload"),
-        ),
-        entry(
-            ~ok & (F.col("decode_error") != "null payload"),
-            "integrity:decode",
-            F.col("decode_error"),
-        ),
-        entry(ok & ~F.col("two_pass_ok"), "integrity:two_pass_agreement", F.lit("passes disagree")),
-        entry(
-            ok & ~F.col("dims_match"),
-            "integrity:dims_cross_check",
-            F.concat(
-                F.lit("declared "),
-                F.col("w").cast("string"),
-                F.lit("×"),
-                F.col("h").cast("string"),
-                F.lit(" actual "),
-                F.col("actual_w").cast("string"),
-                F.lit("×"),
-                F.col("actual_h").cast("string"),
+    null_payload = F.col("decode_error") == "null payload"
+    return flag_rows(
+        _decodable(ctx),
+        [
+            (NOT_NULL_BYTES, null_payload, F.lit("null payload")),
+            # null payloads are flagged by not_null:bytes, not re-flagged here
+            (decode, ~ok & ~null_payload, F.col("decode_error")),
+            (two_pass, ok & ~F.col("two_pass_ok"), F.lit("passes disagree")),
+            (
+                dims,
+                ok & ~F.col("dims_match"),
+                F.concat(
+                    F.lit("declared "),
+                    F.col("w").cast("string"),
+                    F.lit("×"),
+                    F.col("h").cast("string"),
+                    F.lit(" actual "),
+                    F.col("actual_w").cast("string"),
+                    F.lit("×"),
+                    F.col("actual_h").cast("string"),
+                ),
             ),
-        ),
-        entry(
-            ok & ~F.col("psnr_ok"),
-            "integrity:psnr>=40dB",
-            F.concat(F.lit("psnr_regen="), F.round(F.col("psnr_regen"), 2).cast("string")),
-        ),
-        entry(
-            ok & ~F.col("phash_match"),
-            "integrity:phash_cross_check",
-            F.concat(
-                F.lit("stored="),
-                F.col("phash").cast("string"),
-                F.lit(" recomputed="),
-                F.col("phash_recomputed").cast("string"),
-                F.lit(" hamming="),
-                F.col("phash_hamming").cast("string"),
+            (
+                psnr,
+                ok & ~F.col("psnr_ok"),
+                F.concat(F.lit("psnr_regen="), F.round(F.col("psnr_regen"), 2).cast("string")),
             ),
-        ),
-    )
-    return d.select(
-        "image_id",
-        "part",
-        F.explode(F.filter(checks, lambda x: x.isNotNull())).alias("v"),
-    ).select("image_id", "part", "v.constraint", "v.detail")
-
-
-def phash_cross_violations(ctx: SuiteContext) -> DataFrame:
-    bad = _decodable(ctx).filter(F.col("decode_ok") & ~F.col("phash_match"))
-    return as_violation(
-        bad,
-        "integrity:phash_cross_check",
-        F.concat(
-            F.lit("stored="),
-            F.col("phash").cast("string"),
-            F.lit(" recomputed="),
-            F.col("phash_recomputed").cast("string"),
-        ),
+            (
+                phash,
+                ok & ~F.col("phash_match"),
+                F.concat(
+                    F.lit("stored="),
+                    F.col("phash").cast("string"),
+                    F.lit(" recomputed="),
+                    F.col("phash_recomputed").cast("string"),
+                    F.lit(" hamming="),
+                    F.col("phash_hamming").cast("string"),
+                ),
+            ),
+        ],
     )

@@ -1,99 +1,51 @@
 """Range / domain / null constraints — pure pushed-down predicates.
 
 Zero-shuffle scan filters (parquet row-group pruning applies at scale).
-North-rule items: format membership, dimension ranges, payload and
-caption presence. Reference analogue: structure acceptance gates
-(SURVEY §2.8 I7) and the shelf-label UOM set check (`prompts.py:1031-1038`).
+North-rule items: format membership, dimension ranges and caption
+presence; payload presence rides the decode island's scan
+(``integrity.NOT_NULL_BYTES``). Reference analogue: structure acceptance
+gates (SURVEY §2.8 I7) and the shelf-label UOM set check
+(`prompts.py:1031-1038`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pqc.constraints import SuiteContext, as_violation
+from pqc.constraints import SuiteContext, flag_rows
 from pqc.image.codec import SUPPORTED_FORMATS
 
 W_MIN, W_MAX = 1, 4096
 H_MIN, H_MAX = 1, 4096
 
-
-def dim_range_violations(ctx: SuiteContext) -> DataFrame:
-    bad = ctx.meta().filter(
-        F.col("w").isNull()
-        | F.col("h").isNull()
-        | (F.col("w") < W_MIN)
-        | (F.col("w") > W_MAX)
-        | (F.col("h") < H_MIN)
-        | (F.col("h") > H_MAX)
-    )
-    return as_violation(
-        bad,
-        f"range:w,h in [{W_MIN},{W_MAX}]",
-        F.concat_ws("×", F.col("w").cast("string"), F.col("h").cast("string")),
-    )
+NAMES = (f"range:w,h in [{W_MIN},{W_MAX}]", "domain:fmt", "not_null:caption")
 
 
-def fmt_domain_violations(ctx: SuiteContext) -> DataFrame:
-    bad = ctx.meta().filter(
-        F.col("fmt").isNull() | ~F.col("fmt").isin(*sorted(SUPPORTED_FORMATS))
-    )
-    return as_violation(bad, "domain:fmt", F.coalesce(F.col("fmt"), F.lit("<null>")))
-
-
-def payload_present_violations(ctx: SuiteContext) -> DataFrame:
-    # reads the payload column — prefer the decode island's combined
-    # pass (integrity.combined_violations) which folds this check into
-    # the single bytes-reading scan
-    bad = ctx.images.filter(F.col("bytes").isNull())
-    return as_violation(bad, "not_null:bytes", F.lit("null payload"))
-
-
-def caption_present_violations(ctx: SuiteContext) -> DataFrame:
-    bad = ctx.meta().filter(
-        F.col("caption").isNull() | (F.length(F.trim(F.col("caption"))) == 0)
-    )
-    return as_violation(bad, "not_null:caption", F.lit("missing caption"))
+def row_checks() -> list[tuple[str, Column, Column]]:
+    """The ``(constraint, failed, detail)`` triples over one metadata row —
+    shared by the batch suite and the streaming validator."""
+    w, h, fmt, caption = F.col("w"), F.col("h"), F.col("fmt"), F.col("caption")
+    range_name, domain_name, caption_name = NAMES
+    return [
+        (
+            range_name,
+            w.isNull() | h.isNull() | (w < W_MIN) | (w > W_MAX) | (h < H_MIN) | (h > H_MAX),
+            F.concat_ws("×", w.cast("string"), h.cast("string")),
+        ),
+        (
+            domain_name,
+            fmt.isNull() | ~fmt.isin(*sorted(SUPPORTED_FORMATS)),
+            F.coalesce(fmt, F.lit("<null>")),
+        ),
+        (
+            caption_name,
+            caption.isNull() | (F.length(F.trim(caption)) == 0),
+            F.lit("missing caption"),
+        ),
+    ]
 
 
 def combined_violations(ctx: SuiteContext) -> DataFrame:
-    """All four scan-predicate checks in ONE pass over the metadata
-    cache: an array of (constraint, detail) structs gated by `when`,
-    null entries filtered, exploded. Collapses four scheduled plans
-    into one — on a 1000-executor cluster the four-plan version is
-    fine (scans dominate), but plan-count latency dominates small
-    batches and per-partition resume runs."""
-    m = ctx.meta()
-    dim_bad = (
-        F.col("w").isNull()
-        | F.col("h").isNull()
-        | (F.col("w") < W_MIN)
-        | (F.col("w") > W_MAX)
-        | (F.col("h") < H_MIN)
-        | (F.col("h") > H_MAX)
-    )
-    fmt_bad = F.col("fmt").isNull() | ~F.col("fmt").isin(*sorted(SUPPORTED_FORMATS))
-    cap_bad = F.col("caption").isNull() | (F.length(F.trim(F.col("caption"))) == 0)
-
-    def entry(cond, name, detail):
-        return F.when(
-            cond,
-            F.struct(
-                F.lit(name).alias("constraint"), detail.cast("string").alias("detail")
-            ),
-        )
-
-    checks = F.array(
-        entry(
-            dim_bad,
-            f"range:w,h in [{W_MIN},{W_MAX}]",
-            F.concat_ws("×", F.col("w").cast("string"), F.col("h").cast("string")),
-        ),
-        entry(fmt_bad, "domain:fmt", F.coalesce(F.col("fmt"), F.lit("<null>"))),
-        entry(cap_bad, "not_null:caption", F.lit("missing caption")),
-    )
-    return m.select(
-        "image_id",
-        "part",
-        F.explode(F.filter(checks, lambda x: x.isNotNull())).alias("v"),
-    ).select("image_id", "part", "v.constraint", "v.detail")
+    """Every row-local metadata check in one pass over the meta cache."""
+    return flag_rows(ctx.meta(), row_checks())

@@ -21,7 +21,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pqc.constraints import SuiteContext
+from pqc.constraints import SuiteContext, flag_rows
+
+NAMES = ("text:banned_ingredient", "text:needs_review")
 
 FUZZY_RATIO_MIN = 0.85
 
@@ -181,41 +183,31 @@ def screen_hits(ctx: SuiteContext) -> DataFrame:
 def banned_violations(ctx: SuiteContext) -> DataFrame:
     """Exact Banned-type hits are violations; fuzzy hits and Restricted
     types surface as needs_review. One pass over screen_hits (a
-    filter-union would recompute the whole screen per branch)."""
-    hits = screen_hits(ctx)
-    exact_banned = (F.col("match_kind") == "exact") & (F.col("syn_type") == "Banned")
-    review = (F.col("match_kind") == "fuzzy") | (F.col("syn_type") == "Restricted")
-    v = (
-        F.when(
-            exact_banned,
-            F.struct(
-                F.lit("text:banned_ingredient").alias("constraint"),
-                F.concat(
-                    F.col("canonical"),
-                    F.lit(" in segment '"),
-                    F.col("segment"),
-                    F.lit("'"),
-                ).alias("detail"),
+    filter-union would recompute the whole screen per branch); the two
+    conditions are disjoint, so each hit flags at most one row."""
+    banned, review = NAMES
+    kind, canonical, segment = F.col("match_kind"), F.col("canonical"), F.col("segment")
+    return flag_rows(
+        screen_hits(ctx),
+        [
+            (
+                banned,
+                (kind == "exact") & (F.col("syn_type") == "Banned"),
+                F.concat(canonical, F.lit(" in segment '"), segment, F.lit("'")),
             ),
-        ).when(
-            review,
-            F.struct(
-                F.lit("text:needs_review").alias("constraint"),
+            (
+                review,
+                (kind == "fuzzy") | (F.col("syn_type") == "Restricted"),
                 F.concat(
-                    F.col("canonical"),
+                    canonical,
                     F.lit(" ("),
-                    F.col("match_kind"),
+                    kind,
                     F.lit(" "),
                     F.round("score", 1).cast("string"),
                     F.lit(") in '"),
-                    F.col("segment"),
+                    segment,
                     F.lit("'"),
-                ).alias("detail"),
+                ),
             ),
-        )
-    )
-    return (
-        hits.select("image_id", "part", v.alias("v"))
-        .filter(F.col("v").isNotNull())
-        .select("image_id", "part", "v.constraint", "v.detail")
+        ],
     )

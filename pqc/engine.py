@@ -15,6 +15,7 @@ violation union, and the verdict rollup reuses it via cache.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,48 +67,25 @@ class ValidationSuite:
             uniqueness,
         )
 
-        # combined plan-builders (each may emit several constraint names;
-        # the filter-type checks are collapsed into single passes — see
-        # ranges.combined_violations for the latency rationale)
-        self._builders = [
-            uniqueness.violations,
-            referential.violations,
-            ranges.combined_violations,
-        ]
-        self._names = [
-            "uniqueness:image_id",
-            "referential:image_id->image_dim",
-            "range:w,h in [1,4096]",
-            "domain:fmt",
-            "not_null:caption",
+        # (plan-builder, the constraint names it emits)
+        self._branches = [
+            (uniqueness.violations, [uniqueness.NAME]),
+            (referential.violations, [referential.NAME]),
+            (ranges.combined_violations, ranges.NAMES),
         ]
         if include_integrity:
-            self._builders.append(integrity.combined_violations)
-            self._names += [
-                "not_null:bytes",  # rides the decode island's scan
-                "integrity:decode",
-                "integrity:two_pass_agreement",
-                "integrity:dims_cross_check",
-                "integrity:psnr>=40dB",
-                "integrity:phash_cross_check",
-            ]
+            self._branches.append((integrity.combined_violations, integrity.NAMES))
         if include_near_dup:
-            self._builders.append(near_dup.violations)
-            self._names.append(near_dup.NAME)
+            self._branches.append((near_dup.violations, [near_dup.NAME]))
         if include_text:
-            self._builders.append(text_rules.banned_violations)
-            self._names += ["text:banned_ingredient", "text:needs_review"]
+            self._branches.append((text_rules.banned_violations, text_rules.NAMES))
 
     @property
     def constraint_names(self) -> list[str]:
-        return list(self._names)
+        return [name for _, names in self._branches for name in names]
 
     def violation_plan(self, ctx: SuiteContext) -> DataFrame:
-        plans = [fn(ctx) for fn in self._builders]
-        out = plans[0]
-        for p in plans[1:]:
-            out = out.unionByName(p)
-        return out
+        return reduce(DataFrame.unionByName, [fn(ctx) for fn, _ in self._branches])
 
     def run(self, ctx: SuiteContext, drift_column: str = "w") -> SuiteResult:
         from concurrent.futures import ThreadPoolExecutor
@@ -129,14 +107,12 @@ class ValidationSuite:
         # collapses to max(decode island, widest branch). Branches are
         # persisted (released via SuiteResult.release()), so the union
         # below and every downstream consumer reuse the cached blocks.
-        plans = [fn(ctx) for fn in self._builders]  # serial: builds lazy plans
+        plans = [fn(ctx) for fn, _ in self._branches]  # serial: builds lazy plans
         for p in plans:
             ctx.track_persist(p)
         with ThreadPoolExecutor(max_workers=len(plans)) as ex:
             list(ex.map(lambda p: p.count(), plans))
-        violations = plans[0]
-        for p in plans[1:]:
-            violations = violations.unionByName(p)
+        violations = reduce(DataFrame.unionByName, plans)
 
         parts = ctx.meta().groupBy("part").agg(F.count(F.lit(1)).alias("n_checked"))
         names = ctx.images.sparkSession.createDataFrame(

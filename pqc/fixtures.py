@@ -260,8 +260,8 @@ def ensure_generated_parquet(
     schema: str,
     n_tasks: int = 8,
 ) -> str:
-    """Distributed deterministic fixture generation (the catalog
-    pattern, `pqc/audit_packs.py::_ensure_catalog`, generalized):
+    """Distributed deterministic fixture generation, the one writer of
+    every generated-catalog parquet (free-from, catalog and rule packs):
     ``row_fn(i) -> dict`` must be a pure module-level function of the
     index, so every task generates its range independently — the same
     shape a 10^9-row synthetic load uses. Written once per path;

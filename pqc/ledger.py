@@ -99,20 +99,16 @@ def run_with_resume(
     — skipped data is never read.
     """
     suite = suite or ValidationSuite()
-    fps = partition_fingerprints(images)
-    done = completed_partitions(spark, ledger_path)
-    done_fps = fps.join(done, ["part", "input_fingerprint"], "left_semi")
-    skipped = [r["part"] for r in done_fps.select("part").collect()]
-    todo_parts = [
-        r["part"]
-        for r in fps.join(done, ["part", "input_fingerprint"], "left_anti")
-        .select("part")
-        .collect()
-    ]
-    if not todo_parts:
-        return None, sorted(skipped)
+    # one fingerprint job per run: the skip/todo split and the ledger
+    # rows below all reuse the collected (part, input_fingerprint) pairs
+    fps = [(r["part"], r["input_fingerprint"]) for r in partition_fingerprints(images).collect()]
+    done = {tuple(r) for r in completed_partitions(spark, ledger_path).collect()}
+    skipped = sorted(part for part, fp in fps if (part, fp) in done)
+    todo = [(part, fp) for part, fp in fps if (part, fp) not in done]
+    if not todo:
+        return None, skipped
 
-    subset = images.filter(F.col("part").isin(todo_parts))
+    subset = images.filter(F.col("part").isin([part for part, _ in todo]))
     t0 = time.monotonic()
     ctx = SuiteContext(images=subset, image_dim=image_dim)
     result = suite.run(ctx)
@@ -127,7 +123,9 @@ def run_with_resume(
     wall_ms = int((time.monotonic() - t0) * 1000)
     run_id = uuid.uuid4().hex[:12]
     ledger_rows = (
-        per_part.join(fps.select("part", "input_fingerprint"), "part")
+        per_part.join(
+            spark.createDataFrame(todo, "part int, input_fingerprint bigint"), "part"
+        )
         .select(
             "part",
             "input_fingerprint",
@@ -140,7 +138,7 @@ def run_with_resume(
         )
     )
     ledger_rows.write.mode("append").parquet(ledger_path)
-    return result, sorted(skipped)
+    return result, skipped
 
 
 # ---------------------------------------------------------------------------

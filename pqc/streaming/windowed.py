@@ -11,10 +11,10 @@ Two streaming operators:
   over the events schema (the streaming twin of
   pqc/events_ops.hourly_event_rollup);
 - ``streaming_validation``: readStream over an images directory →
-  the same constraint predicates (single-row subset: ranges, domain,
-  nulls) → violation stream. Cross-row constraints (uniqueness,
-  near-dup) stay in the batch/resume path — they need global state,
-  which the ledger handles (pqc/ledger.py).
+  the batch suite's row-local checks (``ranges.row_checks``) plus the
+  payload-presence check → violation stream. Cross-row constraints
+  (uniqueness, near-dup) stay in the batch/resume path — they need
+  global state, which the ledger handles (pqc/ledger.py).
 
 Both are driven to completion synchronously in tests via the memory
 sink + ``processAllAvailable`` (no always-on cluster in the sandbox).
@@ -104,48 +104,19 @@ def streaming_validation(spark: SparkSession, images_dir: str) -> DataFrame:
     (image_id, part, constraint, detail) violation rows as the batch
     suite so downstream sinks are interchangeable.
     """
+    from pqc.constraints import flag_rows
+    from pqc.constraints.integrity import NOT_NULL_BYTES
+    from pqc.constraints.ranges import row_checks
     from pqc.fixtures import IMAGE_SCHEMA
-    from pqc.image.codec import SUPPORTED_FORMATS
 
     stream = (
         spark.readStream.schema(IMAGE_SCHEMA)
         .option("maxFilesPerTrigger", 16)
         .parquet(images_dir)
     )
-    dim_bad = (
-        F.col("w").isNull()
-        | F.col("h").isNull()
-        | (F.col("w") < 1)
-        | (F.col("w") > 4096)
-        | (F.col("h") < 1)
-        | (F.col("h") > 4096)
+    return flag_rows(
+        stream, [*row_checks(), (NOT_NULL_BYTES, F.col("bytes").isNull(), F.lit("null payload"))]
     )
-    fmt_bad = F.col("fmt").isNull() | ~F.col("fmt").isin(*sorted(SUPPORTED_FORMATS))
-    cap_bad = F.col("caption").isNull() | (F.length(F.trim(F.col("caption"))) == 0)
-
-    def entry(cond, name, detail):
-        return F.when(
-            cond,
-            F.struct(
-                F.lit(name).alias("constraint"), detail.cast("string").alias("detail")
-            ),
-        )
-
-    checks = F.array(
-        entry(
-            dim_bad,
-            "range:w,h in [1,4096]",
-            F.concat_ws("×", F.col("w").cast("string"), F.col("h").cast("string")),
-        ),
-        entry(fmt_bad, "domain:fmt", F.coalesce(F.col("fmt"), F.lit("<null>"))),
-        entry(F.col("bytes").isNull(), "not_null:bytes", F.lit("null payload")),
-        entry(cap_bad, "not_null:caption", F.lit("missing caption")),
-    )
-    return stream.select(
-        "image_id",
-        "part",
-        F.explode(F.filter(checks, lambda x: x.isNotNull())).alias("v"),
-    ).select("image_id", "part", "v.constraint", "v.detail")
 
 
 def staged_events_dir(

@@ -231,6 +231,19 @@ def test_near_dup_violations(images, suite_result):
     assert got == expected
 
 
+def test_constraint_names_match_oracle_list():
+    """The engine's names come from each constraint module and must
+    equal the oracle's reference list; the relational slice (no decode
+    island, near-dup or text branch) is its first five names."""
+    from pqc.image_queries import SUITE_CONSTRAINT_NAMES
+
+    assert ValidationSuite().constraint_names == list(SUITE_CONSTRAINT_NAMES)
+    relational = ValidationSuite(
+        include_integrity=False, include_near_dup=False, include_text=False
+    )
+    assert relational.constraint_names == list(SUITE_CONSTRAINT_NAMES[:5])
+
+
 def test_verdict_rollup_consistent(images, suite_result):
     # per-partition verdict counts must reconcile with the violation table
     v = suite_result.verdicts
@@ -310,7 +323,7 @@ def test_drift_null_vs_shifted(spark, images):
 
 
 def test_ledger_resume_equals_full_run(spark, images, tmp_path):
-    from pqc.ledger import run_with_resume
+    from pqc.ledger import partition_fingerprints, run_with_resume
 
     ledger = str(tmp_path / "ledger")
     # near-dup is cross-partition (global) — excluded from per-partition
@@ -333,6 +346,10 @@ def test_ledger_resume_equals_full_run(spark, images, tmp_path):
     )
     validated_parts = {r["part"] for r in res2.verdicts.select("part").distinct().collect()}
     assert all(p >= 8 for p in validated_parts)
+    # the ledger holds exactly one fingerprint row per partition
+    recorded = spark.read.parquet(ledger).select("part", "input_fingerprint").collect()
+    expected = partition_fingerprints(images).select("part", "input_fingerprint").collect()
+    assert sorted(map(tuple, recorded)) == sorted(map(tuple, expected))
 
     # phase 3: nothing left to do
     res3, skipped3 = run_with_resume(spark, images, ledger, suite, dim)

@@ -59,6 +59,31 @@ def test_streaming_validation_matches_batch(spark):
     assert len(got) > 0
 
 
+def test_streaming_validation_flags_hand_made_rows(spark, tmp_path):
+    """Each streaming check fires on a hand-made row, including the
+    null-payload check the fixture (no null payloads) never reaches."""
+    from pqc.fixtures import IMAGE_SCHEMA
+
+    rows = [
+        (0, "clean", b"x", 64, 64, "png", "water, sugar", 1, 0),
+        (1, "null_bytes", None, 64, 64, "png", "water, sugar", 1, 0),
+        (2, "zero_w", b"x", 0, 64, "png", "water, sugar", 1, 1),
+        (3, "bmp_fmt", b"x", 64, 64, "bmp", "water, sugar", 1, 1),
+        (4, "empty_caption", b"x", 64, 64, "png", "", 1, 1),
+    ]
+    src = str(tmp_path / "imgs")
+    spark.createDataFrame(rows, IMAGE_SCHEMA).write.parquet(src)
+    got = run_to_completion(
+        streaming_validation(spark, src), "stream_validate_hand_made"
+    ).collect()
+    assert sorted((r["image_id"], r["constraint"], r["detail"]) for r in got) == [
+        ("bmp_fmt", "domain:fmt", "bmp"),
+        ("empty_caption", "not_null:caption", "missing caption"),
+        ("null_bytes", "not_null:bytes", "null payload"),
+        ("zero_w", "range:w,h in [1,4096]", "0×64"),
+    ]
+
+
 def test_stateful_dedup_flags_cross_batch_duplicates(spark, tmp_path):
     """applyInPandasWithState keeps first-seen seq per image_id across
     micro-batches: a re-sent id in a LATER batch is flagged against the
