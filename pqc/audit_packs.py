@@ -151,9 +151,10 @@ FREE_FROM_FIXTURE = [
     (10, "celery free", None),  # null ingredients → ok
 ]
 
-_FF_ORACLE = f"""
-WITH {values_cte(FREE_FROM_FIXTURE, _FF_COLS, 's')},
-{values_cte(_FF_DIM_ROWS, _FF_DIM_COLS, 'v')},
+# the free-from screen over the CTE ``s`` (row_id, claims,
+# ingredients): vocab dim ``v``, exploded claims ``cl``, and each
+# claim's first (lowest-index) conflict token ``tok``
+_FF_SCREEN_SQL = f"""{values_cte(_FF_DIM_ROWS, _FF_DIM_COLS, 'v')},
 cl AS (
   SELECT DISTINCT row_id, trim(unnest(string_split(lower(claims), ';'))) AS claim,
          {_pad_sql("COALESCE(ingredients, '')")} AS pad
@@ -172,7 +173,11 @@ tok AS (
   FROM best b JOIN hits h
     ON h.row_id = b.row_id AND h.claim = b.claim AND h.tok_idx = b.tok_idx
 )
-SELECT cl.row_id, cl.claim,
+"""
+
+_FF_ORACLE = f"""
+WITH {values_cte(FREE_FROM_FIXTURE, _FF_COLS, 's')},
+{_FF_SCREEN_SQL}SELECT cl.row_id, cl.claim,
        CASE WHEN t.token IS NULL THEN 'ok' ELSE 'needs_review' END AS status,
        COALESCE(t.token, '') AS conflict_token
 FROM cl LEFT JOIN tok t ON t.row_id = cl.row_id AND t.claim = cl.claim
@@ -934,26 +939,7 @@ def _ensure_catalog(spark: SparkSession) -> str:
 def _ff_bulk_oracle() -> str:
     return f"""
 WITH s AS (SELECT * FROM read_parquet('{_catalog_path()}/*.parquet')),
-{values_cte(_FF_DIM_ROWS, _FF_DIM_COLS, 'v')},
-cl AS (
-  SELECT DISTINCT row_id, trim(unnest(string_split(lower(claims), ';'))) AS claim,
-         {_pad_sql("COALESCE(ingredients, '')")} AS pad
-  FROM s
-),
-hits AS (
-  SELECT cl.row_id, cl.claim, v.tok_idx, v.token
-  FROM cl JOIN v ON v.claim = cl.claim
-  WHERE instr(cl.pad, ' ' || v.token || ' ') > 0
-),
-best AS (
-  SELECT row_id, claim, MIN(tok_idx) AS tok_idx FROM hits GROUP BY 1, 2
-),
-tok AS (
-  SELECT b.row_id, b.claim, h.token
-  FROM best b JOIN hits h
-    ON h.row_id = b.row_id AND h.claim = b.claim AND h.tok_idx = b.tok_idx
-)
-SELECT cl.claim,
+{_FF_SCREEN_SQL}SELECT cl.claim,
        CASE WHEN t.token IS NULL THEN 'ok' ELSE 'needs_review' END AS status,
        COALESCE(t.token, '') AS conflict_token,
        COUNT(*) AS n_products

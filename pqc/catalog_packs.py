@@ -39,9 +39,12 @@ PROXIMITY_CHARS = 40  # soy within 40 chars of lecithin (…fast.py:171-183)
 
 _PRES_NORM = "(' ' || trim(regexp_replace(lower(statement), '[^a-z0-9]+', ' ', 'g')) || ' ')"
 
-_PRESENCE_ORACLE = f"""
-WITH {values_cte(PRESENCE_FIXTURE, _PRES_COLS, 'p')},
-n AS (SELECT row_id, {_PRES_NORM} AS s FROM p)
+
+def _presence_sql(src: str) -> str:
+    """The membership map over ``src`` (row_id, statement) as a CTE
+    tail: ``n`` then the SELECT of the five flags. Twin of
+    :func:`_presence_flags`."""
+    return f"""n AS (SELECT row_id, {_PRES_NORM} AS s FROM {src})
 SELECT row_id,
   instr(s, ' lecithin ') > 0 AS lecithin,
   -- soy counts only within ±{PROXIMITY_CHARS} chars of lecithin
@@ -57,6 +60,11 @@ FROM n
 """
 
 
+_PRESENCE_ORACLE = f"""
+WITH {values_cte(PRESENCE_FIXTURE, _PRES_COLS, 'p')},
+{_presence_sql('p')}"""
+
+
 @register("ingredient_presence_map", oracle=_PRESENCE_ORACLE)
 def ingredient_presence_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Membership map with proximity windows and implication rules
@@ -65,7 +73,13 @@ def ingredient_presence_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     window (`:171-183`), ambiguous 'ala' gated on 'lipoic' (`:164-169`),
     manuka ⇒ honey implication (`:199-207`). Pure string expressions —
     a MapType-per-row at scan speed."""
-    p = spark_inline(spark, PRESENCE_FIXTURE, _PRES_COLS)
+    return _presence_flags(spark_inline(spark, PRESENCE_FIXTURE, _PRES_COLS))
+
+
+def _presence_flags(p: DataFrame) -> DataFrame:
+    """(row_id, lecithin, soy_lecithin, ala_lipoic, omega3, honey) over
+    (row_id, statement) — shared by the fixture query and the bulk
+    tier. Twin of :func:`_presence_sql`."""
     s = F.concat(
         F.lit(" "),
         F.trim(F.regexp_replace(F.lower(F.col("statement")), "[^a-z0-9]+", " ")),
@@ -656,18 +670,26 @@ _NEG = "(not|no|never|isn t|without) "
 
 _CLAIMD_FAMS_SQL = ", ".join(f"('{k}', '{p}')" for k, p in _CLAIM_FAMS)
 
-_CLAIMD_ORACLE = f"""
-WITH {values_cte(CLAIM_DETECT_FIXTURE, _CLAIMD_COLS, 'c')},
-fam AS (SELECT * FROM (VALUES {_CLAIMD_FAMS_SQL}) AS _f(family, pat)),
+
+def _claim_detect_sql(src: str) -> str:
+    """Claim hits (row_id, family) over ``src`` (row_id, copy_text) as a
+    CTE tail: ``fam``, ``n``, then the regex-minus-negation SELECT. Twin
+    of :func:`_claim_detect_plan`."""
+    return f"""fam AS (SELECT * FROM (VALUES {_CLAIMD_FAMS_SQL}) AS _f(family, pat)),
 n AS (SELECT row_id,
              (' ' || trim(regexp_replace(lower(copy_text), '[^a-z0-9]+', ' ', 'g')) || ' ')
                AS s
-      FROM c)
+      FROM {src})
 SELECT n.row_id, fam.family
 FROM n JOIN fam
   ON regexp_matches(n.s, fam.pat)
  AND NOT regexp_matches(n.s, '{_NEG}' || fam.pat)
 """
+
+
+_CLAIMD_ORACLE = f"""
+WITH {values_cte(CLAIM_DETECT_FIXTURE, _CLAIMD_COLS, 'c')},
+{_claim_detect_sql('c')}"""
 
 
 @register("nutrition_claim_detect", oracle=_CLAIMD_ORACLE)
@@ -743,19 +765,9 @@ def _claims_bulk_path() -> str:
 
 
 _CLAIMD_BULK_ORACLE = f"""
-WITH c AS (SELECT * FROM read_parquet('{_claims_bulk_path()}/*.parquet')),
-fam AS (SELECT * FROM (VALUES {_CLAIMD_FAMS_SQL}) AS _f(family, pat)),
-n AS (SELECT row_id,
-             (' ' || trim(regexp_replace(lower(copy_text), '[^a-z0-9]+', ' ', 'g')) || ' ')
-               AS s
-      FROM c),
-hits AS (
-  SELECT n.row_id, fam.family
-  FROM n JOIN fam
-    ON regexp_matches(n.s, fam.pat)
-   AND NOT regexp_matches(n.s, '{_NEG}' || fam.pat)
-)
-SELECT family, COUNT(*) AS n_hits FROM hits GROUP BY family
+WITH m AS (
+WITH {_claim_detect_sql(f"read_parquet('{_claims_bulk_path()}/*.parquet')")})
+SELECT family, COUNT(*) AS n_hits FROM m GROUP BY family
 """
 
 
@@ -821,19 +833,8 @@ def _presence_bulk_path() -> str:
 
 
 _PRESENCE_BULK_ORACLE = f"""
-WITH p AS (SELECT * FROM read_parquet('{_presence_bulk_path()}/*.parquet')),
-n AS (SELECT row_id, {_PRES_NORM} AS s FROM p),
-m AS (
-  SELECT row_id,
-    instr(s, ' lecithin ') > 0 AS lecithin,
-    (instr(s, ' soy ') > 0 AND instr(s, ' lecithin ') > 0
-     AND ABS(instr(s, ' soy ') - instr(s, ' lecithin ')) <= {PROXIMITY_CHARS})
-      AS soy_lecithin,
-    (instr(s, ' ala ') > 0 AND instr(s, ' lipoic ') > 0) AS ala_lipoic,
-    instr(s, ' omega 3 ') > 0 AS omega3,
-    (instr(s, ' honey ') > 0 OR instr(s, ' manuka ') > 0) AS honey
-  FROM n
-)
+WITH m AS (
+WITH {_presence_sql(f"read_parquet('{_presence_bulk_path()}/*.parquet')")})
 SELECT COUNT(*) AS n_rows,
        CAST(SUM(CASE WHEN lecithin THEN 1 ELSE 0 END) AS BIGINT) AS n_lecithin,
        CAST(SUM(CASE WHEN soy_lecithin THEN 1 ELSE 0 END) AS BIGINT) AS n_soy_lecithin,
@@ -862,26 +863,7 @@ def ingredient_presence_map_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate row — presence mapping at scan speed, no UDF, no
     shuffle beyond the final combine."""
     _ensure_presence_bulk(spark)
-    p = spark.read.parquet(_presence_bulk_path())
-    s = F.concat(
-        F.lit(" "),
-        F.trim(F.regexp_replace(F.lower(F.col("statement")), "[^a-z0-9]+", " ")),
-        F.lit(" "),
-    )
-    n = p.select("row_id", s.alias("s"))
-    pos = lambda tok: F.instr(F.col("s"), f" {tok} ")  # noqa: E731
-    m = n.select(
-        "row_id",
-        (pos("lecithin") > 0).alias("lecithin"),
-        (
-            (pos("soy") > 0)
-            & (pos("lecithin") > 0)
-            & (F.abs(pos("soy") - pos("lecithin")) <= PROXIMITY_CHARS)
-        ).alias("soy_lecithin"),
-        ((pos("ala") > 0) & (pos("lipoic") > 0)).alias("ala_lipoic"),
-        (pos("omega 3") > 0).alias("omega3"),
-        ((pos("honey") > 0) | (pos("manuka") > 0)).alias("honey"),
-    )
+    m = _presence_flags(spark.read.parquet(_presence_bulk_path()))
     return m.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.col("lecithin").cast("int")).alias("n_lecithin"),

@@ -18,12 +18,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pqc.exprs import hash64, hash64_sql_duckdb, minhash_perm, minhash_perm_sql
-from pqc.io import load_table, spread
 from pqc.registry import pin, register
 from pqc.skew import band_pairs, collapse_reps, expand_rep_pairs
-from pqc.text import NORM_SQL, TOKENS_SQL, norm_text, tokens
-
-_NONEMPTY = "text IS NOT NULL AND length(trim(text)) > 0"
+from pqc.text import _NONEMPTY, TOKENS_SQL, nonempty_docs, tokens
 
 SHINGLE_K = 4  # words per shingle
 JACCARD_THRESHOLD = 0.2
@@ -75,9 +72,7 @@ def exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, fp) — the 10^12-scale plan; `min(doc_id)` picks the
     deterministic keeper, mirroring the reference's first-wins dedupe
     (`artwork_processing_warnings_advisory.py:240-249`)."""
-    docs = spread(load_table(spark, sf_dir, "documents")).filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    )
+    docs = nonempty_docs(spark, sf_dir)
     bow_fp = hash64(F.array_join(F.array_sort(tokens(F.col("text"))), " "))
     return (
         docs.select("doc_id", bow_fp.alias("bow_fp"))
@@ -110,15 +105,9 @@ def _shingles_sql(k: int = SHINGLE_K) -> str:
 """
 
 
-_JACCARD_ORACLE = f"""
-WITH sh AS ({_shingles_sql()}),
-dfc AS (SELECT hs, COUNT(*) AS df FROM sh GROUP BY hs),
-cold AS (SELECT sh.doc_id, sh.hs FROM sh JOIN dfc USING (hs) WHERE dfc.df <= {MAX_SHINGLE_DF}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM cold a JOIN cold b ON a.hs = b.hs AND a.doc_id < b.doc_id
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+# exact-Jaccard confirm of the candidate pairs ``cand`` over the
+# shingle sets ``sh``: the tail of both n-gram and MinHash oracles
+_JACCARD_CONFIRM_SQL = f"""sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
 inter AS (
   SELECT c.doc_a, c.doc_b, COUNT(*) AS n_common
   FROM cand c
@@ -135,18 +124,25 @@ WHERE CAST(i.n_common AS DOUBLE) / (sa.n + sb.n - i.n_common) >= {JACCARD_THRESH
 """
 
 
+_JACCARD_ORACLE = f"""
+WITH sh AS ({_shingles_sql()}),
+dfc AS (SELECT hs, COUNT(*) AS df FROM sh GROUP BY hs),
+cold AS (SELECT sh.doc_id, sh.hs FROM sh JOIN dfc USING (hs) WHERE dfc.df <= {MAX_SHINGLE_DF}),
+cand AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM cold a JOIN cold b ON a.hs = b.hs AND a.doc_id < b.doc_id
+),
+{_JACCARD_CONFIRM_SQL}"""
+
+
 def _shingle_df(spark: SparkSession, sf_dir: str, k: int = SHINGLE_K) -> DataFrame:
     """(doc_id, hs): distinct word-k-gram shingles per doc, hashed ONCE
     to the portable 60-bit integer at creation — every downstream join
     (df cap, candidate self-join, both intersection sides) keys on the
     8-byte hash instead of the ~25-byte shingle string, so the three
     shuffles of the Jaccard plan carry a third of the bytes. All JVM
-    array ops; the string exists only inside this projection.
-    spread(): the one-row-group documents parquet otherwise runs the
-    whole tokenize→shingle→md5 cascade on a single scan task."""
-    docs = spread(load_table(spark, sf_dir, "documents")).filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    )
+    array ops; the string exists only inside this projection."""
+    docs = nonempty_docs(spark, sf_dir)
     t = tokens(F.col("text"))
     shingles = F.transform(
         F.sequence(F.lit(1), F.size(t) - (k - 1)),
@@ -164,6 +160,30 @@ def _shingle_df(spark: SparkSession, sf_dir: str, k: int = SHINGLE_K) -> DataFra
                 F.array_distinct(F.transform(shingles, lambda s: hash64(s)))
             ).alias("hs"),
         )
+    )
+
+
+def _jaccard_confirm(inter: DataFrame, sizes: DataFrame) -> DataFrame:
+    """The exact-Jaccard confirm of the n-gram and MinHash ladders →
+    (doc_a, doc_b, jaccard): ``inter`` is (doc_a, doc_b, n_common),
+    ``sizes`` is (doc_id, n); pairs at Jaccard ≥ JACCARD_THRESHOLD
+    survive, rounded to 6 digits as in the oracles."""
+
+    def side(s: str) -> DataFrame:
+        return sizes.withColumnRenamed("doc_id", f"doc_{s}").withColumnRenamed("n", f"n{s}")
+
+    jacc = (
+        inter.join(side("a"), "doc_a")
+        .join(side("b"), "doc_b")
+        .withColumn(
+            "jaccard_raw",
+            F.col("n_common").cast("double")
+            / (F.col("na") + F.col("nb") - F.col("n_common")),
+        )
+        .filter(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
+    )
+    return jacc.select(
+        "doc_a", "doc_b", F.round(F.col("jaccard_raw"), 6).alias("jaccard")
     )
 
 
@@ -217,19 +237,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_b",
         (F.col("n_cold") + F.coalesce(F.col("n_hot"), F.lit(0))).alias("n_common"),
     )
-    jacc = (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), "doc_b")
-        .withColumn(
-            "jaccard_raw",
-            F.col("n_common").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
-    )
-    return jacc.select(
-        "doc_a", "doc_b", F.round(F.col("jaccard_raw"), 6).alias("jaccard")
-    )
+    return _jaccard_confirm(inter, sizes)
 
 
 # ---------------------------------------------------------------------------
@@ -279,21 +287,7 @@ cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bk a JOIN bk b ON a.band = b.band AND a.doc_id < b.doc_id
 ),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS n_common
-  FROM cand c
-  JOIN sh a ON a.doc_id = c.doc_a
-  JOIN sh b ON b.doc_id = c.doc_b AND a.hs = b.hs
-  GROUP BY 1, 2
-)
-SELECT i.doc_a, i.doc_b,
-       ROUND(CAST(i.n_common AS DOUBLE) / (sa.n + sb.n - i.n_common), 6) AS jaccard
-FROM inter i
-JOIN sizes sa ON sa.doc_id = i.doc_a
-JOIN sizes sb ON sb.doc_id = i.doc_b
-WHERE CAST(i.n_common AS DOUBLE) / (sa.n + sb.n - i.n_common) >= {JACCARD_THRESHOLD}
-"""
+{_JACCARD_CONFIRM_SQL}"""
 
 
 def _minhash_rep_candidates(
@@ -394,19 +388,7 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str, k: int, rows: int) -> DataF
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    jacc = (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), "doc_b")
-        .withColumn(
-            "jaccard_raw",
-            F.col("n_common").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
-    )
-    rep_pairs = jacc.select(
-        "doc_a", "doc_b", F.round(F.col("jaccard_raw"), 6).alias("jaccard")
-    )
+    rep_pairs = _jaccard_confirm(inter, sizes)
     # exact member-level reconstruction: cross pairs inherit the rep
     # pair's Jaccard (same sets ⇒ same score); within-group pairs are
     # identical sets ⇒ Jaccard exactly 1.0 (integer n/(n+n−n)); sizes
@@ -466,8 +448,9 @@ def minhash_lsh_dedup_k128(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SIMHASH_BITS = 32
 
-_SIMHASH_ORACLE = f"""
-WITH tok AS (
+# tok → tf → bits → sig: the (doc_id, simhash) CTE chain of every
+# SimHash oracle
+_SIMHASH_SIG_SQL = f"""tok AS (
   SELECT doc_id, unnest({TOKENS_SQL.format(c='text')}) AS tk
   FROM documents WHERE {_NONEMPTY}
 ),
@@ -480,10 +463,16 @@ bits AS (
          SUM(CASE WHEN (h >> g.b) & 1 = 1 THEN cnt ELSE -cnt END) AS w
   FROM tf, UNNEST(generate_series(0, {SIMHASH_BITS - 1})) AS g(b)
   GROUP BY doc_id, g.b
-)
-SELECT doc_id,
-       CAST(SUM(CASE WHEN w > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS simhash
-FROM bits GROUP BY doc_id
+),
+sig AS (
+  SELECT doc_id,
+         CAST(SUM(CASE WHEN w > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS simhash
+  FROM bits GROUP BY doc_id
+)"""
+
+_SIMHASH_ORACLE = f"""
+WITH {_SIMHASH_SIG_SQL}
+SELECT doc_id, simhash FROM sig
 """
 
 
@@ -503,9 +492,7 @@ def simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _simhash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, simhash) — shared by the fingerprint query and the
     hamming-ball search below."""
-    docs = spread(load_table(spark, sf_dir, "documents")).filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    )
+    docs = nonempty_docs(spark, sf_dir)
     tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("tk"))
     # hash BEFORE the shuffle: grouping term counts by the 60-bit hash
     # instead of the term string shuffles 8-byte keys (guide §2.3) and
@@ -546,25 +533,7 @@ SIMHASH_HAMMING_MAX = 3
 SIMHASH_BANDS = 4  # 4 × 8-bit bands: ≤ 3 dirty bits ⇒ ≥ 1 clean band
 
 _SIMHASH_ND_ORACLE = f"""
-WITH tok AS (
-  SELECT doc_id, unnest({TOKENS_SQL.format(c='text')}) AS tk
-  FROM documents WHERE {_NONEMPTY}
-),
-tf AS (
-  SELECT doc_id, {hash64_sql_duckdb('tk')} AS h, COUNT(*) AS cnt
-  FROM tok GROUP BY doc_id, tk
-),
-bits AS (
-  SELECT doc_id, g.b AS b,
-         SUM(CASE WHEN (h >> g.b) & 1 = 1 THEN cnt ELSE -cnt END) AS w
-  FROM tf, UNNEST(generate_series(0, {SIMHASH_BITS - 1})) AS g(b)
-  GROUP BY doc_id, g.b
-),
-sig AS (
-  SELECT doc_id,
-         CAST(SUM(CASE WHEN w > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS simhash
-  FROM bits GROUP BY doc_id
-)
+WITH {_SIMHASH_SIG_SQL}
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
 FROM sig a JOIN sig b ON a.doc_id < b.doc_id
@@ -672,7 +641,8 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     fixpoint = each node labelled with its component's minimum node id.
 
     ``nodes``: one column ``doc_id``; ``edges``: ``(src, dst)``,
-    expected symmetric. Returns ``(doc_id, cluster_id)``.
+    expected symmetric. Returns ``(doc_id, cluster_id)``. Ids must be
+    numeric: the convergence probe sums them as decimals.
 
     Scale shape: each round is one broadcast hash join (the whole
     label table broadcast onto the cached edge partitions, which are
@@ -698,21 +668,13 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     par = edges.sparkSession.sparkContext.defaultParallelism
     edges = edges.repartition(par).localCheckpoint(eager=False)
     labels = nodes.select("doc_id", F.col("doc_id").alias("cluster_id")).localCheckpoint()
-    from pyspark.sql.types import NumericType
-
-    # numeric ids (every production caller) get the cheap monotone-sum
-    # convergence probe; non-numeric ids keep the join-count probe
-    numeric_ids = isinstance(
-        labels.schema["cluster_id"].dataType, NumericType
-    )
 
     def _label_sum(lbl: DataFrame):
         return lbl.agg(
             F.sum(F.col("cluster_id").cast("decimal(38,0)")).alias("s")
         ).first()["s"]
 
-    converged = False
-    prev_sum = _label_sum(labels) if numeric_ids else None
+    prev_sum = _label_sum(labels)
     for _ in range(CC_MAX_ITERS):
         # labels are |V| rows next to |E| edges — broadcast them so the
         # cached edge partitions are scanned in place and the min
@@ -753,53 +715,22 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         # scalar aggregate over |V| rows replaces the r5 per-round
         # equi-join of old vs new labels (half the per-round jobs).
         # Decimal sum: exact at any corpus size (1e12 ids overflow a
-        # bigint sum), O(1) bytes to the driver. Non-numeric ids fall
-        # back to the join-count probe.
-        if numeric_ids:
-            label_sum = _label_sum(new_labels)
-            changed = 1 if label_sum != prev_sum else 0
-            prev_sum = label_sum
-        else:
-            changed = (
-                new_labels.withColumnRenamed("cluster_id", "new_cid")
-                .join(labels, "doc_id")
-                .filter(F.col("new_cid") != F.col("cluster_id"))
-                .count()
-            )
+        # bigint sum), O(1) bytes to the driver.
         labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # returning partially-propagated labels would be SILENT data
-        # corruption (split components with wrong keepers/sizes that
-        # only surfaces as an unexplained oracle mismatch) — fail loud
-        raise RuntimeError(
-            f"connected_components did not converge in {CC_MAX_ITERS} rounds"
-        )
-    return labels
+        label_sum = _label_sum(labels)
+        if label_sum == prev_sum:
+            return labels
+        prev_sum = label_sum
+    # returning partially-propagated labels would be SILENT data
+    # corruption (split components with wrong keepers/sizes that only
+    # surfaces as an unexplained oracle mismatch) — fail loud
+    raise RuntimeError(
+        f"connected_components did not converge in {CC_MAX_ITERS} rounds"
+    )
 
 
 _CLUSTERS_ORACLE = f"""
-WITH RECURSIVE tok AS (
-  SELECT doc_id, unnest({TOKENS_SQL.format(c='text')}) AS tk
-  FROM documents WHERE {_NONEMPTY}
-),
-tf AS (
-  SELECT doc_id, {hash64_sql_duckdb('tk')} AS h, COUNT(*) AS cnt
-  FROM tok GROUP BY doc_id, tk
-),
-bits AS (
-  SELECT doc_id, g.b AS b,
-         SUM(CASE WHEN (h >> g.b) & 1 = 1 THEN cnt ELSE -cnt END) AS w
-  FROM tf, UNNEST(generate_series(0, {SIMHASH_BITS - 1})) AS g(b)
-  GROUP BY doc_id, g.b
-),
-sig AS (
-  SELECT doc_id,
-         CAST(SUM(CASE WHEN w > 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS simhash
-  FROM bits GROUP BY doc_id
-),
+WITH RECURSIVE {_SIMHASH_SIG_SQL},
 pairs AS (
   SELECT a.doc_id AS da, b.doc_id AS db
   FROM sig a JOIN sig b ON a.doc_id < b.doc_id

@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 
 from pqc.image.codec import encode
 from pqc.image.phash import phash64
+from pqc.io import cached_dir, publish_rows
 
 SEED = 42
 N_PARTS = 16
@@ -264,35 +265,24 @@ def ensure_generated_parquet(
     every generated-catalog parquet (free-from, catalog and rule packs):
     ``row_fn(i) -> dict`` must be a pure module-level function of the
     index, so every task generates its range independently — the same
-    shape a 10^9-row synthetic load uses. Written once per path;
-    the DuckDB oracles read the same files."""
-    import os
-
+    shape a 10^9-row synthetic load uses. Written once per path and
+    published atomically (:func:`pqc.io.cached_dir`); the DuckDB
+    oracles read the same files."""
     from pqc.session import _ship_package
 
     _ship_package(spark)
-    if not os.path.exists(path + "/_SUCCESS"):
-        from collections.abc import Iterator
 
-        def gen(batches: "Iterator[pd.DataFrame]"):
-            for pdf in batches:
-                yield pd.DataFrame([row_fn(int(i)) for i in pdf["id"]])
+    def gen(batches: "Iterator[pd.DataFrame]"):
+        for pdf in batches:
+            yield pd.DataFrame([row_fn(int(i)) for i in pdf["id"]])
 
-        # atomic publish (write to a pid-suffixed temp dir, rename into
-        # place), as for the IVF index cache: a direct
-        # check-then-overwrite races concurrent pqc sessions, and the
-        # DuckDB oracles glob path/*.parquet without checking _SUCCESS
-        from pqc.io import publish_dir
-
-        tmp = f"{path}.build{os.getpid()}"
-        (
-            spark.range(0, n_rows, numPartitions=n_tasks)
-            .mapInPandas(gen, schema=schema)
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        publish_dir(tmp, path)
-    return path
+    return cached_dir(
+        path,
+        lambda tmp: spark.range(0, n_rows, numPartitions=n_tasks)
+        .mapInPandas(gen, schema=schema)
+        .write.mode("overwrite")
+        .parquet(tmp),
+    )
 
 
 def integrity_sidecar_path(n_rows: int = 2000) -> str:
@@ -336,9 +326,7 @@ def ensure_integrity_sidecar(n_rows: int = 2000) -> str:
         from concurrent.futures import ProcessPoolExecutor
 
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        os.makedirs(os.path.dirname(path), exist_ok=True)
         # row derivation is pure CPU (decode×2 + phash per row) — fan
         # it over processes; order is pinned by the map
         with ProcessPoolExecutor(max_workers=min(16, os.cpu_count() or 1)) as ex:
@@ -367,34 +355,23 @@ def ensure_integrity_sidecar(n_rows: int = 2000) -> str:
                 ("thumb_mean", pa.float64()),
             ]
         )
-        cols = {k: [r[k] for r in rows] for k in rows[0]}
-        tmp = path + ".tmp"
-        pq.write_table(pa.Table.from_pydict(cols, schema=schema), tmp)
-        os.replace(tmp, path)  # atomic publish (shared /tmp, many procs)
+        publish_rows(path, rows, schema)
     return path
-
-
-_FIXTURE_CACHE: dict[tuple[int, int], str] = {}
 
 
 def cached_images_path(spark: SparkSession, n_rows: int, shift: int = 0) -> str:
     """Generate once per (n_rows, shift) and persist as Iceberg-layout
     partitioned Parquet under /tmp; reused across queries/tests."""
-    import os
-
     # ship pqc to Python workers even when generation is skipped (a
     # foreign driver session + warm cache would otherwise hit
     # ModuleNotFoundError inside the decode island's mapInPandas)
     from pqc.session import _ship_package
 
     _ship_package(spark)
-
-    key = (n_rows, shift)
-    path = f"/tmp/pqc_fixtures/images_n{n_rows}_s{shift}"
-    if key not in _FIXTURE_CACHE:
-        if not os.path.exists(path + "/_SUCCESS"):
-            generate_images(spark, n_rows, shift).write.mode("overwrite").partitionBy(
-                "part"
-            ).parquet(path)
-        _FIXTURE_CACHE[key] = path
-    return _FIXTURE_CACHE[key]
+    return cached_dir(
+        f"/tmp/pqc_fixtures/images_n{n_rows}_s{shift}",
+        lambda tmp: generate_images(spark, n_rows, shift)
+        .write.mode("overwrite")
+        .partitionBy("part")
+        .parquet(tmp),
+    )

@@ -22,6 +22,7 @@ import re as _re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pqc.io import cached_dir
 from pqc.registry import defer_release, register
 from pqc.text import word_grams_sql
 from pqc.skew import DEFAULT_BAND_CAP as _BAND_CAP
@@ -44,19 +45,16 @@ def _ensure_meta_parquet(spark: SparkSession, n_rows: int, shift: int = 0) -> No
     """Write the payload-free projection once per (n_rows, shift) so the
     driver's DuckDB oracle can read the same rows the Spark query sees.
     Cheap: metadata only, no bytes column."""
-    import os
-
     from pqc.fixtures import cached_images_path
 
-    path = meta_parquet_path(n_rows, shift)
-    if not os.path.exists(path + "/_SUCCESS"):
-        (
-            spark.read.parquet(cached_images_path(spark, n_rows, shift))
-            .select(*_META_COLS)
-            .coalesce(4)
-            .write.mode("overwrite")
-            .parquet(path)
-        )
+    cached_dir(
+        meta_parquet_path(n_rows, shift),
+        lambda tmp: spark.read.parquet(cached_images_path(spark, n_rows, shift))
+        .select(*_META_COLS)
+        .coalesce(4)
+        .write.mode("overwrite")
+        .parquet(tmp),
+    )
 
 
 def _images(spark: SparkSession) -> DataFrame:
@@ -527,6 +525,25 @@ def images_banned_caption_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 # decode gates remain rows-only).
 # ---------------------------------------------------------------------------
 
+# every suite constraint in engine order; the first five are the
+# relational slice
+SUITE_CONSTRAINT_NAMES = (
+    "uniqueness:image_id",
+    "referential:image_id->image_dim",
+    "range:w,h in [1,4096]",
+    "domain:fmt",
+    "not_null:caption",
+    "not_null:bytes",
+    "integrity:decode",
+    "integrity:two_pass_agreement",
+    "integrity:dims_cross_check",
+    "integrity:psnr>=40dB",
+    "integrity:phash_cross_check",
+    "near_dup:phash_hamming<=6",
+    "text:banned_ingredient",
+    "text:needs_review",
+)
+
 _REL_VIOLATIONS_SQL = f"""
 m AS (SELECT seq, image_id, part, w, h, fmt, caption FROM {_meta_glob()}),
 dim AS (SELECT DISTINCT image_id FROM m WHERE seq % 500 <> 3),
@@ -561,18 +578,27 @@ SELECT image_id, part, "constraint", detail FROM v
 """
 
 
-def _relational_suite_result(spark: SparkSession):
+def _suite_result(spark: SparkSession, suite):
+    """Run ``suite`` (a ValidationSuite) over the images fixture; its
+    caches are freed when the next registered query runs."""
     from pqc.constraints import SuiteContext
-    from pqc.engine import ValidationSuite
     from pqc.fixtures import generate_image_dim
 
     images = _images(spark)
-    ctx = SuiteContext(images=images, image_dim=generate_image_dim(images))
-    res = ValidationSuite(
-        include_integrity=False, include_near_dup=False, include_text=False
-    ).run(ctx)
+    res = suite.run(SuiteContext(images=images, image_dim=generate_image_dim(images)))
     defer_release(res.release)
     return res
+
+
+def _relational_suite_result(spark: SparkSession):
+    from pqc.engine import ValidationSuite
+
+    return _suite_result(
+        spark,
+        ValidationSuite(
+            include_integrity=False, include_near_dup=False, include_text=False
+        ),
+    )
 
 
 @register("images_relational_violations", oracle=_REL_VIOL_ORACLE)
@@ -588,16 +614,18 @@ def images_relational_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.violations.orderBy("constraint", "image_id")
 
 
-_REL_VERDICTS_ORACLE = f"""
-WITH {_REL_VIOLATIONS_SQL},
+def _verdicts_oracle(with_body: str, viol: str, names) -> str:
+    """The verdict rollup twin: ``with_body`` defines the meta CTE ``m``
+    and the violation rows ``viol``; every (part, name) pair gets its
+    n_checked, n_violations and passed."""
+    names_sql = ", ".join(f"('{n}')" for n in names)
+    return f"""
+WITH {with_body},
 parts AS (SELECT part, COUNT(*) AS n_checked FROM m GROUP BY part),
-names("constraint") AS (
-  VALUES ('uniqueness:image_id'), ('referential:image_id->image_dim'),
-         ('range:w,h in [1,4096]'), ('domain:fmt'), ('not_null:caption')
-),
+names("constraint") AS (VALUES {names_sql}),
 vc AS (
   SELECT part, "constraint", COUNT(*) AS n_violations
-  FROM v GROUP BY part, "constraint"
+  FROM {viol} GROUP BY part, "constraint"
 )
 SELECT p.part, n."constraint", p.n_checked,
        COALESCE(vc.n_violations, 0) AS n_violations,
@@ -607,7 +635,10 @@ LEFT JOIN vc ON vc.part = p.part AND vc."constraint" = n."constraint"
 """
 
 
-@register("images_relational_verdicts", oracle=_REL_VERDICTS_ORACLE)
+@register(
+    "images_relational_verdicts",
+    oracle=_verdicts_oracle(_REL_VIOLATIONS_SQL, "v", SUITE_CONSTRAINT_NAMES[:5]),
+)
 def images_relational_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-partition verdict rollup (part, constraint, n_checked,
     n_violations, passed) for the relational constraint slice — the
@@ -629,23 +660,6 @@ def images_relational_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _SUPPORTED_SQL = "('jpeg', 'lsy', 'png')"
-
-SUITE_CONSTRAINT_NAMES = (
-    "uniqueness:image_id",
-    "referential:image_id->image_dim",
-    "range:w,h in [1,4096]",
-    "domain:fmt",
-    "not_null:caption",
-    "not_null:bytes",
-    "integrity:decode",
-    "integrity:two_pass_agreement",
-    "integrity:dims_cross_check",
-    "integrity:psnr>=40dB",
-    "integrity:phash_cross_check",
-    "near_dup:phash_hamming<=6",
-    "text:banned_ingredient",
-    "text:needs_review",
-)
 
 
 def _suite_with_body() -> str:
@@ -799,34 +813,15 @@ WITH {_suite_with_body()}
 SELECT image_id, part, "constraint", detail FROM allv
 """
 
-_SUITE_NAMES_SQL = ", ".join(f"('{n}')" for n in SUITE_CONSTRAINT_NAMES)
-
-_SUITE_VERDICTS_ORACLE = f"""
-WITH {_suite_with_body()},
-parts AS (SELECT part, COUNT(*) AS n_checked FROM m GROUP BY part),
-names("constraint") AS (VALUES {_SUITE_NAMES_SQL}),
-vc AS (
-  SELECT part, "constraint", COUNT(*) AS n_violations
-  FROM allv GROUP BY part, "constraint"
+_SUITE_VERDICTS_ORACLE = _verdicts_oracle(
+    _suite_with_body(), "allv", SUITE_CONSTRAINT_NAMES
 )
-SELECT p.part, n."constraint", p.n_checked,
-       COALESCE(vc.n_violations, 0) AS n_violations,
-       COALESCE(vc.n_violations, 0) = 0 AS passed
-FROM parts p CROSS JOIN names n
-LEFT JOIN vc ON vc.part = p.part AND vc."constraint" = n."constraint"
-"""
 
 
 def _full_suite_result(spark: SparkSession):
-    from pqc.constraints import SuiteContext
     from pqc.engine import ValidationSuite
-    from pqc.fixtures import generate_image_dim
 
-    images = _images(spark)
-    ctx = SuiteContext(images=images, image_dim=generate_image_dim(images))
-    res = ValidationSuite().run(ctx)
-    defer_release(res.release)  # caches freed when the next query runs
-    return res
+    return _suite_result(spark, ValidationSuite())
 
 
 @register("images_suite_verdicts", oracle=_SUITE_VERDICTS_ORACLE)

@@ -81,6 +81,45 @@ def publish_dir(tmp: str, path: str) -> None:
     shutil.rmtree(tmp, ignore_errors=True)
 
 
+def cached_dir(path: str, write) -> str:
+    """The one way to build a ``/tmp/pqc_fixtures`` directory cache:
+    unless ``path/_SUCCESS`` exists, ``write(tmp)`` fills a pid-suffixed
+    temp directory that :func:`publish_dir` then renames into place.
+    Readers (the DuckDB oracles glob ``path/*.parquet`` without checking
+    ``_SUCCESS``) never see a half-written or concurrently overwritten
+    copy; a ``write`` that raises leaves nothing behind."""
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        tmp = f"{path}.build{os.getpid()}"
+        try:
+            write(tmp)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        publish_dir(tmp, path)
+    return path
+
+
+def publish_rows(path: str, rows: list[dict], schema) -> str:
+    """Write ``rows`` (dicts keyed by the pyarrow ``schema``'s fields)
+    as the single parquet file ``path``, atomically: a pid-suffixed
+    temp file is renamed into place, so a crash mid-write never leaves
+    a truncated file that an existence check would serve."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = f"{path}.tmp{os.getpid()}"
+    cols = {f.name: [r[f.name] for r in rows] for f in schema}
+    try:
+        pq.write_table(pa.Table.from_pydict(cols, schema=schema), tmp)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+    os.replace(tmp, path)
+    return path
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     for name in TESTDATA_TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")

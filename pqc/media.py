@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pqc.io import cached_dir, publish_rows
 from pqc.media_codec import rvid_encode, rvid_frame, rvid_header, wav_decode, wav_encode
 from pqc.registry import register
 
@@ -158,14 +159,16 @@ def cached_media_table(spark: SparkSession) -> DataFrame:
     metadata-only consumers get REAL column pruning of the payload and
     the decode island gets a real bytes scan — same layout discipline
     as the images fixture."""
-    import os
-
     from pqc.session import _ship_package
 
     _ship_package(spark)  # decode island needs pqc on workers even warm-cached
-    path = _media_parquet_path()
-    if not os.path.exists(path + "/_SUCCESS"):
-        media_table(spark).write.mode("overwrite").partitionBy("part").parquet(path)
+    path = cached_dir(
+        _media_parquet_path(),
+        lambda tmp: media_table(spark)
+        .write.mode("overwrite")
+        .partitionBy("part")
+        .parquet(tmp),
+    )
     return spark.read.parquet(path)
 
 
@@ -317,12 +320,7 @@ def _ensure_features_sidecar() -> str:
     path = _features_sidecar_path()
     if not os.path.exists(path):
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        # pyarrow (unlike the Spark writers behind every other /tmp
-        # cache) does not create parent directories — a fresh
-        # environment after the documented cache-reset would crash here
-        os.makedirs(os.path.dirname(path), exist_ok=True)
         rows = []
         for i in range(N_MEDIA_ROWS):
             r = _media_row(i)
@@ -345,8 +343,7 @@ def _ensure_features_sidecar() -> str:
                 ("mean_luma", pa.float64()),
             ]
         )
-        cols = {k: [r[k] for r in rows] for k in rows[0]}
-        pq.write_table(pa.Table.from_pydict(cols, schema=schema), path)
+        publish_rows(path, rows, schema)
     return path
 
 

@@ -195,14 +195,17 @@ _UNIT_TO_G_SQL = (
     "WHEN 'µg' THEN 0.000001 ELSE NULL END)"
 )
 
-_SERVING_ORACLE = f"""
-WITH {values_cte(SERVING_FIXTURE, _SERVING_COLS, 's')},
-conv AS (
+
+def _serving_sql(src: str) -> str:
+    """The per-serving rule over ``src`` (the fixture columns) as a CTE
+    tail → (sku_id, amount_g, flagged, suggested_fix), ``amount_g``
+    unrounded. Twin of :func:`_serving_checks`."""
+    return f"""conv AS (
   SELECT sku_id, scope, serving_size_g,
          amount_value * {_UNIT_TO_G_SQL} AS amount_g
-  FROM s
+  FROM {src}
 )
-SELECT sku_id,
+SELECT sku_id, amount_g,
        (scope = 'per_serving' AND amount_g > serving_size_g + 0.000001)
          AS flagged,
        CASE
@@ -211,9 +214,16 @@ SELECT sku_id,
          WHEN amount_g / serving_size_g > 5000 THEN 'ug'
          WHEN amount_g / serving_size_g > 5 THEN 'mg'
          ELSE 'review'
-       END AS suggested_fix,
-       ROUND(amount_g, 9) AS amount_g
+       END AS suggested_fix
 FROM conv
+"""
+
+
+_SERVING_ORACLE = f"""
+WITH m AS (
+WITH {values_cte(SERVING_FIXTURE, _SERVING_COLS, 's')},
+{_serving_sql('s')})
+SELECT sku_id, flagged, suggested_fix, ROUND(amount_g, 9) AS amount_g FROM m
 """
 
 
@@ -224,6 +234,15 @@ def per_serving_sanity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio > 5000 ⇒ ug, > 5 ⇒ mg (`:1986-1989`); unit map includes the
     malformed 'ug'/'mcg' spellings (`:1970-1973`)."""
     s = spark_inline(spark, SERVING_FIXTURE, _SERVING_COLS)
+    return _serving_checks(s).select(
+        "sku_id", "flagged", "suggested_fix", F.round("amount_g", 9).alias("amount_g")
+    )
+
+
+def _serving_checks(s: DataFrame) -> DataFrame:
+    """(sku_id, amount_g, flagged, suggested_fix) — the per-serving rule
+    shared by the fixture query and the bulk tier. Twin of
+    :func:`_serving_sql`."""
     factor = (
         F.when(F.col("amount_unit") == "g", 1.0)
         .when(F.col("amount_unit") == "mg", 0.001)
@@ -243,9 +262,9 @@ def per_serving_sanity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return s.select(
         "sku_id",
+        amount_g.alias("amount_g"),
         flagged.alias("flagged"),
         fix.alias("suggested_fix"),
-        F.round(amount_g, 9).alias("amount_g"),
     )
 
 
@@ -292,24 +311,8 @@ def _serving_bulk_path() -> str:
 
 
 _SERVING_BULK_ORACLE = f"""
-WITH s AS (SELECT * FROM read_parquet('{_serving_bulk_path()}/*.parquet')),
-conv AS (
-  SELECT sku_id, scope, serving_size_g,
-         amount_value * {_UNIT_TO_G_SQL} AS amount_g
-  FROM s
-),
-m AS (
-  SELECT sku_id, amount_g, serving_size_g,
-         (scope = 'per_serving' AND amount_g > serving_size_g + 0.000001) AS flagged,
-         CASE
-           WHEN NOT (scope = 'per_serving' AND amount_g > serving_size_g + 0.000001)
-             THEN NULL
-           WHEN amount_g / serving_size_g > 5000 THEN 'ug'
-           WHEN amount_g / serving_size_g > 5 THEN 'mg'
-           ELSE 'review'
-         END AS suggested_fix
-  FROM conv
-)
+WITH m AS (
+WITH {_serving_sql(f"read_parquet('{_serving_bulk_path()}/*.parquet')")})
 SELECT flagged, suggested_fix, COUNT(*) AS n,
        ROUND(CAST(SUM(CAST(amount_g AS DECIMAL(28,6))) AS DOUBLE), 6) AS sum_amount_g
 FROM m GROUP BY flagged, suggested_fix
@@ -336,29 +339,7 @@ def per_serving_sanity_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pqc.exprs import dsum
 
     _ensure_serving_bulk(spark)
-    s = spark.read.parquet(_serving_bulk_path())
-    factor = (
-        F.when(F.col("amount_unit") == "g", 1.0)
-        .when(F.col("amount_unit") == "mg", 0.001)
-        .when(F.col("amount_unit").isin("ug", "mcg", "µg"), 0.000001)
-        .otherwise(F.lit(None))
-    )
-    amount_g = F.col("amount_value") * factor
-    flagged = (F.col("scope") == "per_serving") & (
-        amount_g > F.col("serving_size_g") + 0.000001
-    )
-    ratio = amount_g / F.col("serving_size_g")
-    fix = (
-        F.when(~flagged, F.lit(None))
-        .when(ratio > 5000, "ug")
-        .when(ratio > 5, "mg")
-        .otherwise("review")
-    )
-    m = s.select(
-        amount_g.alias("amount_g"),
-        flagged.alias("flagged"),
-        fix.alias("suggested_fix"),
-    )
+    m = _serving_checks(spark.read.parquet(_serving_bulk_path()))
     return m.groupBy("flagged", "suggested_fix").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(dsum(F.col("amount_g")), 6).alias("sum_amount_g"),

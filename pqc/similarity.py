@@ -15,7 +15,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from pqc.exprs import hash64
-from pqc.io import load_table, publish_dir, spread
+from pqc.io import cached_dir, load_table, spread
 from pqc.registry import pin, register
 from pqc.skew import band_pairs, collapse_reps, expand_rep_pairs
 
@@ -319,7 +319,7 @@ def _seed_centroids(emb: DataFrame) -> DataFrame:
 EMB_DIM = 64
 IVF_NPROBE = 2
 
-# trained-centroid CTEs shared by the multiprobe oracle: one Lloyd
+# trained-centroid CTEs shared by the IVF oracles: one Lloyd
 # iteration from the deterministic init (decimal-exact per-dimension
 # means so both engines produce bit-identical centroids)
 _TRAINED_CENT_SQL = f"""
@@ -350,9 +350,12 @@ dims AS (
 cent AS (SELECT centroid_id, list(v ORDER BY i) AS ce FROM dims GROUP BY centroid_id)
 """
 
-_MULTIPROBE_ORACLE = f"""
-WITH {_TRAINED_CENT_SQL},
-scored_assign AS (
+
+def _scored_assign_sql(src: str) -> str:
+    """``scored_assign``: every vector of ``src`` ranks the centroids of
+    the ``cent`` CTE by cosine (``rk`` 1 = its bucket; ties broken by
+    centroid_id, as in :func:`_argmax_assign`)."""
+    return f"""scored_assign AS (
   SELECT e.vec_id, cent.centroid_id,
          ROW_NUMBER() OVER (
            PARTITION BY e.vec_id
@@ -361,29 +364,37 @@ scored_assign AS (
                      * sqrt({_dot_sql('cent.ce', 'cent.ce')})) DESC,
                     cent.centroid_id ASC
          ) AS rk
-  FROM embeddings e CROSS JOIN cent
-),
+  FROM {src} e CROSS JOIN cent
+)"""
+
+
+def _ivf_oracle(nprobe: int) -> str:
+    """Twin of :func:`_ivf_topk` → (qid, centroid_id, cid, cosine, rk):
+    trained centroids, the corpus bucketed at rk 1, each query searching
+    its ``nprobe`` best buckets."""
+    return f"""
+WITH {_TRAINED_CENT_SQL},
+{_scored_assign_sql('embeddings')},
 bucket AS (
   SELECT e.vec_id AS cid, e.embedding AS ce2, s.centroid_id
   FROM embeddings e JOIN scored_assign s ON e.vec_id = s.vec_id AND s.rk = 1
 ),
-probes AS (
+q AS (
   SELECT e.vec_id AS qid, e.embedding AS qe, s.centroid_id
-  FROM embeddings e JOIN scored_assign s
-    ON e.vec_id = s.vec_id AND s.rk <= {IVF_NPROBE}
+  FROM embeddings e JOIN scored_assign s ON e.vec_id = s.vec_id AND s.rk <= {nprobe}
   WHERE e.vec_id >= {IVF_QUERY_LO} AND e.vec_id < {IVF_QUERY_HI}
 )
-SELECT qid, cid, ROUND(cos, 8) AS cosine, rk FROM (
-  SELECT p.qid, b.cid,
-         {_dot_sql('p.qe', 'b.ce2')} /
-           (sqrt({_dot_sql('p.qe', 'p.qe')}) * sqrt({_dot_sql('b.ce2', 'b.ce2')})) AS cos,
+SELECT qid, centroid_id, cid, ROUND(cos, 8) AS cosine, rk FROM (
+  SELECT q.qid, q.centroid_id, b.cid,
+         {_dot_sql('q.qe', 'b.ce2')} /
+           (sqrt({_dot_sql('q.qe', 'q.qe')}) * sqrt({_dot_sql('b.ce2', 'b.ce2')})) AS cos,
          ROW_NUMBER() OVER (
-           PARTITION BY p.qid
-           ORDER BY {_dot_sql('p.qe', 'b.ce2')} /
-             (sqrt({_dot_sql('p.qe', 'p.qe')}) * sqrt({_dot_sql('b.ce2', 'b.ce2')})) DESC,
+           PARTITION BY q.qid
+           ORDER BY {_dot_sql('q.qe', 'b.ce2')} /
+             (sqrt({_dot_sql('q.qe', 'q.qe')}) * sqrt({_dot_sql('b.ce2', 'b.ce2')})) DESC,
              b.cid ASC
          ) AS rk
-  FROM probes p JOIN bucket b ON p.centroid_id = b.centroid_id AND p.qid <> b.cid
+  FROM q JOIN bucket b ON q.centroid_id = b.centroid_id AND q.qid <> b.cid
 ) WHERE rk <= 5
 """
 
@@ -416,43 +427,6 @@ def _lloyd_refined_centroids(emb: DataFrame) -> DataFrame:
     )
 
 
-_IVF_ORACLE = f"""
-WITH {_TRAINED_CENT_SQL},
-scored_assign AS (
-  SELECT e.vec_id, cent.centroid_id,
-         ROW_NUMBER() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY {_dot_sql('e.embedding', 'cent.ce')} /
-                    (sqrt({_dot_sql('e.embedding', 'e.embedding')})
-                     * sqrt({_dot_sql('cent.ce', 'cent.ce')})) DESC,
-                    cent.centroid_id ASC
-         ) AS rk
-  FROM embeddings e CROSS JOIN cent
-),
-bucket AS (
-  SELECT e.vec_id AS cid, e.embedding AS ce2, s.centroid_id
-  FROM embeddings e JOIN scored_assign s ON e.vec_id = s.vec_id AND s.rk = 1
-),
-q AS (
-  SELECT e.vec_id AS qid, e.embedding AS qe, s.centroid_id
-  FROM embeddings e JOIN scored_assign s ON e.vec_id = s.vec_id AND s.rk = 1
-  WHERE e.vec_id >= {IVF_QUERY_LO} AND e.vec_id < {IVF_QUERY_HI}
-)
-SELECT qid, centroid_id, cid, ROUND(cos, 8) AS cosine, rk FROM (
-  SELECT q.qid, q.centroid_id, b.cid,
-         {_dot_sql('q.qe', 'b.ce2')} /
-           (sqrt({_dot_sql('q.qe', 'q.qe')}) * sqrt({_dot_sql('b.ce2', 'b.ce2')})) AS cos,
-         ROW_NUMBER() OVER (
-           PARTITION BY q.qid
-           ORDER BY {_dot_sql('q.qe', 'b.ce2')} /
-             (sqrt({_dot_sql('q.qe', 'q.qe')}) * sqrt({_dot_sql('b.ce2', 'b.ce2')})) DESC,
-             b.cid ASC
-         ) AS rk
-  FROM q JOIN bucket b ON q.centroid_id = b.centroid_id AND q.qid <> b.cid
-) WHERE rk <= 5
-"""
-
-
 # cache-key token for the persisted IVF index: bump on ANY change to
 # _lloyd_refined_centroids / seed selection, or warm caches silently
 # serve centroids trained by the old code
@@ -473,9 +447,8 @@ def _cached_trained_centroids(
     caches (the documented delete-to-reset ritual applies), PLUS a
     training-algorithm version token — bump _IVF_INDEX_VERSION with
     any _lloyd_refined_centroids change or stale indexes serve old
-    centroids silently. Published atomically (write to a temp dir,
-    rename into place): the r4 check-then-overwrite raced concurrent
-    pqc sessions on this shared host."""
+    centroids silently. Published atomically
+    (:func:`pqc.io.cached_dir`)."""
     import os
 
     src = f"{sf_dir}/embeddings.parquet"
@@ -485,11 +458,10 @@ def _cached_trained_centroids(
         f"_{st.st_size}_{int(st.st_mtime)}_k{IVF_N_CENTROIDS}"
         f"_{_IVF_INDEX_VERSION}"
     )
-    path = f"/tmp/pqc_fixtures/ivf_cent_{key}"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        tmp = f"{path}.build{os.getpid()}"
-        _lloyd_refined_centroids(emb).write.mode("overwrite").parquet(tmp)
-        publish_dir(tmp, path)
+    path = cached_dir(
+        f"/tmp/pqc_fixtures/ivf_cent_{key}",
+        lambda tmp: _lloyd_refined_centroids(emb).write.mode("overwrite").parquet(tmp),
+    )
     return spark.read.parquet(path)
 
 
@@ -542,7 +514,7 @@ def _ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
     )
 
 
-@register("ivf_ann_topk", oracle=_IVF_ORACLE)
+@register("ivf_ann_topk", oracle=_ivf_oracle(1))
 def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate nearest neighbours with TRAINED centroids,
     single-probe: one Lloyd refinement of the deterministic seed
@@ -563,7 +535,10 @@ def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_topk(spark, sf_dir, 1)
 
 
-@register("ivf_multiprobe_topk", oracle=_MULTIPROBE_ORACLE)
+@register(
+    "ivf_multiprobe_topk",
+    oracle=f"SELECT qid, cid, cosine, rk FROM ({_ivf_oracle(IVF_NPROBE)})",
+)
 def ivf_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-Flat with TRAINED centroids and multi-probe — the corpus-
     scale ANN path the plain `ivf_ann_topk` approximates: one Lloyd
@@ -729,26 +704,12 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cosine_confirm(_numpy_pair_candidates(emb, NEAR_DUP_COS), emb)
 
 
-_EMB_ND_BUCKETED_ORACLE = f"""
-WITH {_AUG_EMB_SQL},
-cent AS (SELECT vec_id AS centroid_id, embedding AS ce
-         FROM aug WHERE vec_id < {IVF_N_CENTROIDS}),
-assign AS (
-  SELECT vec_id, centroid_id FROM (
-    SELECT e.vec_id, cent.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY {_dot_sql('e.embedding', 'cent.ce')} /
-                      (sqrt({_dot_sql('e.embedding', 'e.embedding')})
-                       * sqrt({_dot_sql('cent.ce', 'cent.ce')})) DESC,
-                      cent.centroid_id ASC
-           ) AS rk
-    FROM aug e CROSS JOIN cent
-  ) WHERE rk = 1
-),
+# twin of _in_bucket_near_dups over the augmented corpus, given the
+# ``cent`` CTE: rank → same-bucket pairs → decimal cosine confirm
+_IN_BUCKET_ND_SQL = f"""{_scored_assign_sql('aug')},
 side AS (
-  SELECT e.vec_id, e.embedding, a.centroid_id
-  FROM aug e JOIN assign a ON e.vec_id = a.vec_id
+  SELECT e.vec_id, e.embedding, s.centroid_id
+  FROM aug e JOIN scored_assign s ON e.vec_id = s.vec_id AND s.rk = 1
 ),
 pairs AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.centroid_id,
@@ -761,6 +722,12 @@ pairs AS (
 SELECT id_a, id_b, centroid_id, ROUND(cos, 8) AS cosine
 FROM pairs WHERE cos >= {NEAR_DUP_COS}
 """
+
+_EMB_ND_BUCKETED_ORACLE = f"""
+WITH {_AUG_EMB_SQL},
+cent AS (SELECT vec_id AS centroid_id, embedding AS ce
+         FROM aug WHERE vec_id < {IVF_N_CENTROIDS}),
+{_IN_BUCKET_ND_SQL}"""
 
 
 @register("embedding_near_dup_bucketed", oracle=_EMB_ND_BUCKETED_ORACLE)
@@ -782,43 +749,11 @@ def embedding_near_dup_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _in_bucket_near_dups(emb, _seed_centroids(emb))
 
 
-def _trained_cent_sql_over(table: str) -> str:
-    """The shared one-Lloyd-iteration trained-centroid CTE chain,
-    parameterized over the source relation (the IVF queries train on
-    `embeddings`; the trained near-dup variant trains on the augmented
-    corpus CTE)."""
-    return _TRAINED_CENT_SQL.replace("FROM embeddings", f"FROM {table}")
-
-
+# the trained-centroid chain retargeted at the augmented corpus CTE
 _EMB_ND_TRAINED_ORACLE = f"""
 WITH {_AUG_EMB_SQL},
-{_trained_cent_sql_over('aug')},
-scored_assign AS (
-  SELECT e.vec_id, cent.centroid_id,
-         ROW_NUMBER() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY {_dot_sql('e.embedding', 'cent.ce')} /
-                    (sqrt({_dot_sql('e.embedding', 'e.embedding')})
-                     * sqrt({_dot_sql('cent.ce', 'cent.ce')})) DESC,
-                    cent.centroid_id ASC
-         ) AS rk
-  FROM aug e CROSS JOIN cent
-),
-side AS (
-  SELECT e.vec_id, e.embedding, s.centroid_id
-  FROM aug e JOIN scored_assign s ON e.vec_id = s.vec_id AND s.rk = 1
-),
-pairs AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.centroid_id,
-         {_dot_sql('a.embedding', 'b.embedding')} /
-           (sqrt({_dot_sql('a.embedding', 'a.embedding')})
-            * sqrt({_dot_sql('b.embedding', 'b.embedding')})) AS cos
-  FROM side a JOIN side b
-    ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
-)
-SELECT id_a, id_b, centroid_id, ROUND(cos, 8) AS cosine
-FROM pairs WHERE cos >= {NEAR_DUP_COS}
-"""
+{_TRAINED_CENT_SQL.replace('FROM embeddings', 'FROM aug')},
+{_IN_BUCKET_ND_SQL}"""
 
 
 @register("embedding_near_dup_trained", oracle=_EMB_ND_TRAINED_ORACLE)

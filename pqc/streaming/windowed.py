@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pqc.exprs import dsum, dsum_sql
+from pqc.io import cached_dir
 from pqc.registry import register
 
 EVENTS_SCHEMA = T.StructType(
@@ -141,12 +142,13 @@ def staged_events_dir(
     st = os.stat(src)
     key = f"{os.path.basename(os.path.normpath(sf_dir))}_{st.st_size}_{int(st.st_mtime)}"
     if n_files > 1:
-        stage = f"/tmp/pqc_fixtures/stream_src_{key}_x{n_files}"
-        if not os.path.exists(f"{stage}/_SUCCESS"):
-            spark.read.parquet(src).repartition(n_files).write.mode(
-                "overwrite"
-            ).parquet(stage)
-        return stage
+        return cached_dir(
+            f"/tmp/pqc_fixtures/stream_src_{key}_x{n_files}",
+            lambda tmp: spark.read.parquet(src)
+            .repartition(n_files)
+            .write.mode("overwrite")
+            .parquet(tmp),
+        )
     stage = f"/tmp/pqc_fixtures/stream_src_{key}"
     staged = f"{stage}/events.parquet"
     if not os.path.exists(staged):

@@ -76,6 +76,17 @@ def word_grams_sql(src: str, key_cols: str, seg_col: str = "segment", n_max: int
 
 _NONEMPTY = "text IS NOT NULL AND length(trim(text)) > 0"
 
+
+def nonempty_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`documents` rows with non-blank text (the oracles' ``_NONEMPTY``)
+    — the input of every text and dedup query. spread(): the
+    one-row-group parquet otherwise runs the whole tokenize cascade on
+    a single scan task."""
+    return spread(load_table(spark, sf_dir, "documents")).filter(
+        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
+    )
+
+
 # ---------------------------------------------------------------------------
 # Queries
 # ---------------------------------------------------------------------------
@@ -97,9 +108,7 @@ FROM t GROUP BY lang
 def token_count_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token counting per language — all JVM-side array ops
     (split + size), no UDF; single low-cardinality shuffle."""
-    docs = spread(load_table(spark, sf_dir, "documents")).filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    )
+    docs = nonempty_docs(spark, sf_dir)
     from pqc.exprs import davg
 
     return (
@@ -137,9 +146,7 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic language-ID (stopword-ratio) vs the labeled lang —
     emitted as a confusion rollup. The n-gram scorer runs entirely in
     codegen'd array expressions (filter lambda), no Python."""
-    docs = spread(load_table(spark, sf_dir, "documents")).filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    )
+    docs = nonempty_docs(spark, sf_dir)
     toks = tokens(F.col("text"))
     n_stop = F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS)))
     n_tok = F.size(toks)
@@ -176,9 +183,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     diversity, the deterministic core of the reference's structure
     acceptance gates (SURVEY §2.8 I7) re-targeted at corpus curation.
     Pure array expressions; embarrassingly parallel (no shuffle)."""
-    docs = spread(load_table(spark, sf_dir, "documents")).filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    )
+    docs = nonempty_docs(spark, sf_dir)
     tok = tokens(F.col("text"))
     n = F.size(tok).cast("double")
     n_stop = F.size(F.filter(tok, lambda x: x.isin(*STOPWORDS))).cast("double")
@@ -203,10 +208,9 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup at 10^12 scale: dedup shuffles 8-byte fingerprints, never
     the payloads. For partial-overlap detection see
     `winnowing_fingerprints` (the rolling-hash window-min scheme)."""
-    docs = spread(load_table(spark, sf_dir, "documents")).filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
+    return nonempty_docs(spark, sf_dir).select(
+        "doc_id", hash64(norm_text(F.col("text"))).alias("fingerprint")
     )
-    return docs.select("doc_id", hash64(norm_text(F.col("text"))).alias("fingerprint"))
 
 
 # ---------------------------------------------------------------------------
@@ -251,9 +255,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned by doc_id. Nothing leaves the JVM. The document-
     frequency join is the inverted-index shape every downstream
     salience/keyword extractor at 10^12 rows uses."""
-    docs = spread(load_table(spark, sf_dir, "documents")).filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    )
+    docs = nonempty_docs(spark, sf_dir)
     # pinned: tf feeds BOTH the rank input and the document-frequency
     # aggregate — unpersisted, the scan + normalize + tokenize +
     # explode + tf aggregate (the query's dominant cost at corpus
@@ -331,10 +333,7 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc partitions only — no global sort), then distinct. At 10^12
     docs the window never leaves its document, so this parallelizes
     per-doc exactly like the shingle pipeline."""
-    docs = spread(load_table(spark, sf_dir, "documents")).filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    )
-    return winnow_fps(docs)
+    return winnow_fps(nonempty_docs(spark, sf_dir))
 
 
 def winnow_fps(docs: DataFrame) -> DataFrame:
@@ -414,9 +413,7 @@ def bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     no UDF, one low-cardinality shuffle."""
     from pqc.exprs import davg
 
-    docs = spread(load_table(spark, sf_dir, "documents")).filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    )
+    docs = nonempty_docs(spark, sf_dir)
     norm = norm_text(F.col("text"))
     n_ws = F.size(tokens(F.col("text")))
     n_bpe = F.size(F.regexp_extract_all(norm, F.lit(BPE_REGEX), F.lit(0)))
@@ -495,9 +492,7 @@ def quality_filter_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain is the thresholded production form. Pure array expressions,
     embarrassingly parallel, no shuffle — at 10^12 docs this is a scan-
     speed map with the verdict feeding a partitioned filter."""
-    docs = spread(load_table(spark, sf_dir, "documents")).filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    )
+    docs = nonempty_docs(spark, sf_dir)
     tok = tokens(F.col("text"))
     nt = norm_text(F.col("text"))
     n = F.size(tok)
@@ -571,9 +566,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes train/eval splits leak-proof and resumable. The portable
     md5-based hash64 (pqc/exprs.py) keeps the bucket assignment — and
     therefore the exact sampled id set — identical in the DuckDB twin."""
-    docs = spread(load_table(spark, sf_dir, "documents")).filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    )
+    docs = nonempty_docs(spark, sf_dir)
     bucket = F.pmod(
         hash64(F.concat(F.lit(SAMPLE_SALT), F.col("doc_id").cast("string"))),
         F.lit(1000),
@@ -637,9 +630,7 @@ def decontamination_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     and cross-document partial overlaps (the seeded near-dup
     relatives of the eval ids), so the driver row checks a mixed
     result set."""
-    docs = spread(load_table(spark, sf_dir, "documents")).filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    )
+    docs = nonempty_docs(spark, sf_dir)
     t = tokens(F.col("text"))
     k = CONTAM_GRAM_K
     grams = F.transform(
@@ -708,9 +699,7 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates over 8-byte gram hashes — map-side combined, shuffle
     keyed on (doc_id), embarrassingly parallel at corpus
     scale."""
-    docs = spread(load_table(spark, sf_dir, "documents")).filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
-    )
+    docs = nonempty_docs(spark, sf_dir)
     t = tokens(F.col("text"))
     k = REP_GRAM_K
     grams = F.transform(

@@ -21,6 +21,35 @@ def test_query_matches_oracle(spark, name):
     compare(df, rq.oracle, SF_DIR_SMALL, name=name)
 
 
+@pytest.mark.parametrize("tier", ["presence", "serving", "claims"])
+def test_bulk_tier_rows_match_rule_sql(spark, tier):
+    """The bulk oracles compare aggregates only, where row errors can
+    cancel out. Run each bulk tier's shared rule builder over its
+    generated 5000-row parquet and compare every row with the same
+    rule's SQL builder over the same files."""
+    from pqc import catalog_packs as cp
+    from pqc import rule_packs as rp
+
+    ensure, path, plan, sql = {
+        "presence": (
+            cp._ensure_presence_bulk, cp._presence_bulk_path,
+            cp._presence_flags, cp._presence_sql,
+        ),
+        "serving": (
+            rp._ensure_serving_bulk, rp._serving_bulk_path,
+            rp._serving_checks, rp._serving_sql,
+        ),
+        "claims": (
+            cp._ensure_claims_bulk, cp._claims_bulk_path,
+            lambda c: cp._claim_detect_plan(spark, c), cp._claim_detect_sql,
+        ),
+    }[tier]
+    ensure(spark)
+    rows = plan(spark.read.parquet(path()))
+    oracle = "WITH " + sql(f"read_parquet('{path()}/*.parquet')")
+    compare(rows, oracle, SF_DIR_SMALL, name=f"{tier}_bulk_rows")
+
+
 def test_oracle_dtypes_match():
     """Regression for the r2/r3 red driver rows: DuckDB types SUM(BIGINT)
     as HUGEINT, which pandas surfaces as float64, while Spark emits int64

@@ -201,28 +201,23 @@ def test_quantile_exact_matches_rational_reference(vals, q):
 
 def test_connected_components_chain_and_islands(spark):
     """Hash-to-min label propagation must converge transitively on a
-    path graph (A-B-C-D-E collapses to one cluster labelled A — needs
-    multiple rounds, not one) and leave islands as singletons."""
+    path graph (0-1-2-3-4 collapses to one cluster labelled 0 — needs
+    multiple rounds, not one) and leave islands as singletons. Ids are
+    longs, as for every caller: the convergence probe sums them."""
     from pqc.dedup import connected_components
 
-    nodes = spark.createDataFrame(
-        [(f"d{i}",) for i in range(8)], "doc_id string"
-    )
-    chain = [(f"d{i}", f"d{i+1}") for i in range(4)]  # d0..d4 path
-    pair = [("d5", "d6")]
-    edges_one_way = chain + pair  # d7 isolated
+    nodes = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
+    chain = [(i, i + 1) for i in range(4)]  # 0..4 path
+    pair = [(5, 6)]
+    edges_one_way = chain + pair  # 7 isolated
     edges = spark.createDataFrame(
-        edges_one_way + [(b, a) for a, b in edges_one_way], "src string, dst string"
+        edges_one_way + [(b, a) for a, b in edges_one_way], "src long, dst long"
     )
     got = {
         r["doc_id"]: r["cluster_id"]
         for r in connected_components(nodes, edges).collect()
     }
-    assert got == {
-        "d0": "d0", "d1": "d0", "d2": "d0", "d3": "d0", "d4": "d0",
-        "d5": "d5", "d6": "d5",
-        "d7": "d7",
-    }
+    assert got == {0: 0, 1: 0, 2: 0, 3: 0, 4: 0, 5: 5, 6: 5, 7: 7}
 
 
 @given(
